@@ -41,30 +41,28 @@ EXT = "ext_id"
 def truncate_state(
     df: DataFrame, num_partitions: int | None = None, *key_cols: str
 ) -> DataFrame:
-    """Materialize per-iteration vertex state with runtime-EXACT statistics:
-    optional repartition on the caller's join keys →
-    ``localCheckpoint(eager=True)`` (cuts lineage) → ``persist`` →
-    ``count()`` (fills the columnar cache so its statistics go exact).
-    Callers must ``unpersist()`` the previous state.
+    """Materialize per-iteration vertex state in ONE job, with runtime-EXACT
+    statistics: optional repartition on the caller's join keys →
+    ``persist`` → ``localCheckpoint(eager=True)`` (cuts lineage) →
+    ``unpersist`` of the columnar copy.  The state is held once, in the
+    checkpoint's blocks, which the context cleaner frees once the frame is
+    unreachable; callers' ``unpersist()`` of the previous state is harmless.
 
-    Why the trailing count (round-3 postmortem, supersedes round 2's):
-    ``localCheckpoint`` propagates the origin plan's sizeInBytes ESTIMATE
-    into the LogicalRDD, and a LAZY persist on top keeps exposing that
-    estimate until something materializes the cache.  An iterative plan
-    that multiplies the previous state's estimate through its join-stat
-    products then compounds it per superstep — measured on the karate
-    fixture: the narrow-edge PageRank shape DOUBLES the BigInteger digit
-    count every iteration (11 → 24 → 50 → … digits; Catalyst wedges in
-    BigInteger.multiply by ~iteration 60, and ``localCheckpoint`` throws
-    "BigInteger would overflow supported range" soon after), while the
-    round-2 shape merely grew linearly (~3 digits/iter) and happened to
-    survive.  Filling the cache immediately makes the InMemoryRelation
-    report its MATERIALIZED byte size, so every downstream planning pass
-    sees a small exact constant — digit growth is flat at ANY iteration
-    count (measured: 3 digits at iteration 200).  The count itself scans
-    the just-checkpointed local blocks once (V rows, no shuffle) — noise
-    next to the E-row gather each superstep pays — and the cache fill it
-    triggers would have happened on first use anyway.
+    Why this order keeps the statistics exact (round-3 postmortem):
+    ``localCheckpoint`` copies the origin plan's sizeInBytes into the
+    LogicalRDD it returns.  Over a plain plan that is an ESTIMATE, and an
+    iterative plan that multiplies the previous state's estimate through
+    its join-stat products compounds it per superstep — measured on the
+    karate fixture: the narrow-edge PageRank shape DOUBLES the BigInteger
+    digit count every iteration (11 → 24 → 50 → … digits; Catalyst wedges
+    in BigInteger.multiply by ~iteration 60, and ``localCheckpoint`` throws
+    "BigInteger would overflow supported range" soon after).  Persisting
+    FIRST makes the origin plan an InMemoryRelation that the checkpoint's
+    own job fills, so the LogicalRDD takes the relation's MATERIALIZED byte
+    size — a small exact constant at any iteration count (3 digits after
+    120 karate supersteps; ``tests/test_pagerank.py`` pins it).  The older
+    order (checkpoint, then persist + count) reached the same exact size
+    with a second job per call and two copies of every state.
 
     KNOWN-BAD alternative (round 2): rebuilding the frame over
     ``queryExecution().toRdd()`` via the internal ``createDataFrame`` to
@@ -73,51 +71,40 @@ def truncate_state(
     degree-orientation join keeping 14 of 55 edges).
 
     No V-row state can auto-broadcast regardless of stats because the hot
-    joins hint ``shuffle_hash`` explicitly.  ``localCheckpoint`` loses
-    Catalyst's knowledge of the rows' physical partitioning, so callers
-    that need co-partitioned joins pass ``num_partitions`` + ``key_cols``
-    to re-establish it (one V-row exchange folded into the next superstep
-    — cheap beside the E-row gather).
+    joins hint ``shuffle_hash`` explicitly.  Callers that need co-partitioned
+    joins pass ``num_partitions`` + ``key_cols``; under ``static_plan`` the
+    checkpoint keeps that hash partitioning, and the planner drops the
+    repartition when the plan already ends in it (a gather on the same key).
     """
     if num_partitions and key_cols:
         df = df.repartition(num_partitions, *key_cols)
-    out = df.localCheckpoint(eager=True).persist()
-    out.count()
+    df.persist()
+    out = df.localCheckpoint(eager=True)
+    df.unpersist()
     return out
 
 
-# Edge-count threshold above which iterative operators run their superstep
-# loops under static_plan (AQE off).  Matches pagerank's FUSE_MIN_EDGES
-# economics: below it, AQE's post-shuffle coalescing of sub-second tasks is
-# a win; above it, coalescing folds the gather below the slot count and
-# idles cores on exactly the high-core leg (measured at R-MAT scale 23).
-STATIC_PLAN_MIN_EDGES = 20_000_000
-
-
 @contextmanager
-def static_plan(spark: SparkSession, enabled: bool = True):
-    """Disable AQE for a large statically-partitioned iterative section.
+def static_plan(spark: SparkSession):
+    """Disable AQE for a statically-partitioned iterative section.
 
     The superstep plans (PageRank/WCC/LPA gathers) fix their partitioning
     explicitly — every exchange is a hash repartition the engine chose, and
     the hot joins carry ``shuffle_hash`` hints — so AQE has nothing left to
-    optimize.  What it still *does* is harmful at high core counts:
-    post-shuffle partition coalescing folds the E-row gather's shuffle
-    below the slot count (64 MB target per task), idling cores on exactly
-    the leg that has many of them, and per-stage re-planning inserts
-    core-count-independent driver latency at every materialization
-    barrier.  Measured (R-MAT scale 23, 131M edges, fuse=4, 32 shuffle
-    partitions): local[32] superstep 6.67 → 3.78 s/iter with AQE off,
-    while local[8] is nearly unchanged — AQE was the single largest
-    N→4N scaling-efficiency penalty.
+    optimize.  What it still *does* costs at every size: it runs each
+    shuffle stage as its own job and re-plans between them (9 jobs per
+    PageRank superstep instead of 2 at R-MAT scale 12 on local[4], 0.79 →
+    0.615 CPU s/superstep); a frame ``truncate_state`` checkpoints under it
+    reports unknown partitioning, so the next join re-shuffles it; and at
+    high core counts post-shuffle partition coalescing folds the E-row
+    gather below the slot count (64 MB target per task), idling cores on
+    exactly the leg that has many of them (R-MAT scale 23 on local[32]:
+    6.67 → 3.78 s/superstep with AQE off).  Loops therefore enter it before
+    they checkpoint their first state.
 
-    Callers gate on graph size (small graphs *benefit* from coalescing —
-    fewer sub-second tasks to schedule), restore-on-exit keeps the
-    session's AQE default for everything outside the loop.
+    Restore-on-exit keeps the session's AQE default for everything outside
+    the loop.
     """
-    if not enabled:
-        yield
-        return
     key = "spark.sql.adaptive.enabled"
     prev = spark.conf.get(key, "true")
     spark.conf.set(key, "false")

@@ -63,15 +63,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..graph import (
-    DST,
-    SRC,
-    STATIC_PLAN_MIN_EDGES,
-    VID,
-    LinkGraph,
-    static_plan,
-    truncate_state,
-)
+from ..graph import DST, SRC, VID, LinkGraph, static_plan, truncate_state
 from .spectral import _HA, _HB, _HP, _hash_unit, _sym_weighted
 
 _KS = 0.1  # Gephi's local speed constant
@@ -220,7 +212,7 @@ def force_atlas2(
             f"exact repulsion is O(V^2); refusing V={n_v} > {_EXACT_MAX_V} "
             "(set barnes_hut_optimize=True for the grid far-field path)"
         )
-    with static_plan(spark, enabled=graph.number_of_edges() >= STATIC_PLAN_MIN_EDGES):
+    with static_plan(spark):
         for it in range(max_iter):
             n_bins = max(4, min(64, int(math.sqrt(max(n_v, 1) / target_occupancy)) + 1))
             cx, cy = _grid_keys(xmin, xmax, ymin, ymax, n_bins)

@@ -30,15 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..graph import (
-    DST,
-    SRC,
-    STATIC_PLAN_MIN_EDGES,
-    VID,
-    LinkGraph,
-    static_plan,
-    truncate_state,
-)
+from ..graph import DST, SRC, VID, LinkGraph, static_plan, truncate_state
 
 
 def label_propagation(
@@ -62,19 +54,20 @@ def label_propagation(
         edges = graph.edges.select(SRC, DST)
         owned = False
 
-    labels = graph.vertices().withColumn("label", F.col(VID))
-    labels = truncate_state(labels, n_part, VID)
+    # AQE off: it would run each shuffle stage of a round as its own job,
+    # and state checkpointed under it loses its hash partitioning (see
+    # static_plan).
+    with static_plan(spark):
+        labels = graph.vertices().withColumn("label", F.col(VID))
+        labels = truncate_state(labels, n_part, VID)
 
-    start_iter = 0
-    if checkpointer is not None:
-        resumed = checkpointer.resume(spark)
-        if resumed is not None:
-            start_iter, labels = resumed
-            labels = truncate_state(labels, n_part, VID)
+        start_iter = 0
+        if checkpointer is not None:
+            resumed = checkpointer.resume(spark)
+            if resumed is not None:
+                start_iter, labels = resumed
+                labels = truncate_state(labels, n_part, VID)
 
-    # AQE off for big-graph loops, same economics as pagerank's superstep
-    # gate (see static_plan).
-    with static_plan(spark, enabled=graph.number_of_edges() >= STATIC_PLAN_MIN_EDGES):
         for it in range(start_iter, max_iter):
             # neighbor votes carry a NULL tag; the self vote carries its own
             # (old) label as the tag — every vertex has exactly one tagged

@@ -15,20 +15,26 @@ Python API parity: ``python/cugraph/cugraph/link_analysis/pagerank.py:83-308``.
 
 Spark plan per superstep — ONE job, one real shuffle:
 - state is ``[id, out_wsum(, p_norm), rank]`` hash-partitioned by id and
-  persisted+checkpointed; the static columns ride along so no per-iteration
-  join against a separate vertex table is needed.
+  checkpointed; the static columns ride along so no per-iteration join
+  against a separate vertex table is needed.  ``id`` is the narrowed key
+  type of the edge frame (int when V < 2^31) from the static base on, and
+  widens back to long only at the output and at ``checkpointer.save``.
 - contributions are pre-divided once (rank/out_wsum) so the gather is a
-  plain associative SUM; the big edge table is persisted hash-partitioned
-  by ``src`` at graph build and never re-shuffled — contribs arrive already
-  hash-partitioned on the join key, so the only exchange is the
-  groupBy(dst) of the E-row contribution stream.
+  plain associative SUM; the narrowed edge table is hash-partitioned by
+  ``src`` once per call and never re-shuffled — contribs arrive already
+  hash-partitioned on the same key type, the gather lands hash(dst) =
+  hash(id) for the state join, so the only exchange is the groupBy(dst)
+  of the E-row contribution stream (a cast key on either join side would
+  add one exchange each).
+- the loop runs under ``static_plan`` (AQE off): AQE would run each
+  shuffle stage as its own job.
 - the L1 delta and the NEXT iteration's dangling mass are computed via
   ``DataFrame.observe`` on the same plan that materializes the new state —
   scalar folds cost zero extra jobs (the dangling sum uses the new ranks,
   which is exactly what iteration i+1 needs per ``pagerank_impl.cuh:238``).
-- per-iteration ``truncate_state`` (localCheckpoint + stats-neutral rebuild
-  + persist) keeps the plan flat and plan-time cost constant at any
-  iteration count (see ``graph.truncate_state``).
+- per-iteration ``truncate_state`` (persist + eager localCheckpoint, one
+  job) keeps the plan flat and plan-time cost constant at any iteration
+  count (see ``graph.truncate_state``).
 - ``fuse=k`` chains k supersteps into one materialization so the
   core-count-independent per-materialization costs amortize — the lever
   for N→4N scaling efficiency; intermediate dangling masses come from an
@@ -120,175 +126,188 @@ def pagerank(
     if V == 0:
         raise ValueError("pagerank: graph has no vertices")
 
-    # ---- static vertex base: [id, out_wsum(, p_norm)], hash(id) -----------
-    if precomputed_vertex_out_weight is not None:
-        ows = _renumber_values(graph, precomputed_vertex_out_weight, "out_wsum")
-        ows = (
-            graph.vertices()
-            .join(ows, VID, "left")
-            .fillna(0.0, ["out_wsum"])
+    # AQE off for the whole run, set-up included: it would run each shuffle
+    # stage of a superstep as its own job, and a frame checkpointed under
+    # it loses its hash partitioning, so every superstep would re-shuffle
+    # the edges (see static_plan).
+    with static_plan(spark):
+        # ---- narrow edge frame for the gather loop ------------------------
+        # The per-superstep E-row gather is memory-bandwidth-bound at high core
+        # counts (profiled at R-MAT scale 23: 4 sequential join+groupBy stages
+        # dominate each fused block), so bytes scanned per edge are the scaling
+        # lever: vertex ids are narrowed to int whenever they fit (halves the
+        # id columns), and an unweighted graph's constant 1.0 weight column is
+        # dropped entirely (the gather then sums contrib directly).  24 B/edge
+        # -> 8 B/edge on the unweighted path.  Renumbered ids are dense, so
+        # they fit whenever V < 2^31; raw ids of a graph built with
+        # renumber=False fit when their range does (one aggregate over the
+        # cached edges).  Every vertex frame below is keyed on the same type
+        # (key_t), so no join in the loop or in the fusion setup needs a cast
+        # key.
+        narrow_ids = V < (1 << 31) and (
+            graph.renumber_map is not None or _raw_ids_fit_int(graph.edges)
         )
-    else:
-        ows = graph.out_weight_sums()
+        key_t = "int" if narrow_ids else "long"
+        w_mult = graph.properties.weighted
+        edges_owned = narrow_ids or not w_mult
+        if edges_owned:
+            _id = (lambda c: F.col(c).cast(key_t)) if narrow_ids else F.col
+            ecols = [_id(SRC).alias(SRC), _id(DST).alias(DST)]
+            if w_mult:
+                ecols.append(F.col(WGT))
+            # truncate_state, not a bare persist: a lazy persist leaves the
+            # frame's sizeInBytes as a chained ESTIMATE that every superstep
+            # referencing `edges` compounds until Catalyst's BigInteger
+            # overflows (~iteration 60; see truncate_state's postmortem).  The
+            # eager localCheckpoint pins runtime-exact stats once, up front.
+            edges = truncate_state(graph.edges.select(*ecols), n_part, SRC)
+        else:
+            edges = graph.edges  # [src, dst, weight] partitioned by src
 
-    pers = personalization is not None
-    if pers:
-        p = _renumber_values(graph, personalization, "p")
-        psum = p.agg(F.sum("p")).collect()[0][0]
-        ows = (
-            ows.join(p, VID, "left")
-            .fillna(0.0, ["p"])
-            .withColumn("p_norm", F.col("p") / F.lit(float(psum)))
-            .drop("p")
-        )
-    static_cols = ["out_wsum"] + (["p_norm"] if pers else [])
+        def wsum(x):
+            """Σ x·w over edges; the weight is the constant 1.0 if unweighted."""
+            return F.sum(x * F.col(WGT)) if w_mult else F.sum(x)
 
-    vbase = ows.repartition(n_part, VID).persist()
-    # one upfront scalar: whether any dangling vertices exist at all
-    has_dangling = vbase.filter(F.col("out_wsum") == 0.0).limit(1).count() > 0
+        def keyed(df: DataFrame) -> DataFrame:
+            # try_cast: a raw nstart id beyond int matches no vertex
+            return df.withColumn(VID, F.col(VID).try_cast(key_t))
 
-    # ---- fusion setup: static sink-flow columns (see docstring) -----------
-    if fuse == "auto":
-        fuse = FUSE_AUTO_K if graph.number_of_edges() >= FUSE_MIN_EDGES else 1
-    fuse_k = max(1, int(fuse))
-    if pers:
-        fuse_k = 1
-    beta_cols: list = []
-    B: list = []  # B[m-1] = Σ_v β_m(v)
-    n_sinks = 0
-    beta_frames: list = []
-    beta_df = None  # static frame [id, β1..β_{k-1}]; joined into the state
-    # base so the block-start moments M_m = Σ rank·β_m fold into the SAME
-    # observe() that computes l1/dangling — no separate per-block join+agg
-    # job (a core-count-independent fixed cost that capped N→4N scaling).
-    # Cost: k-1 extra double columns ride through each checkpoint.
-    if fuse_k > 1 and has_dangling:
-        n_sinks = vbase.filter(F.col("out_wsum") == 0.0).count()
-        edges0 = graph.edges
-        prev_beta = None
-        joined = vbase.select(VID)
-        for m in range(1, fuse_k):
-            name = f"_beta{m}"
-            if m == 1:
-                sinks = vbase.filter(F.col("out_wsum") == 0.0).select(
-                    F.col(VID).alias(DST)
-                )
-                flow = (
-                    edges0.join(sinks, DST, "left_semi")
-                    .groupBy(F.col(SRC).alias(VID))
-                    .agg(F.sum(WGT).alias("_f"))
-                )
-            else:
-                bdst = prev_beta.select(
-                    F.col(VID).alias(DST), F.col(f"_beta{m-1}").alias("_pb")
-                )
-                flow = (
-                    edges0.join(bdst, DST)
-                    .groupBy(F.col(SRC).alias(VID))
-                    .agg(F.sum(F.col(WGT) * F.col("_pb")).alias("_f"))
-                )
-            beta_m = truncate_state(
-                vbase.select(VID, "out_wsum")
-                .join(flow, VID, "left")
-                .fillna(0.0, ["_f"])
-                .select(
-                    VID,
-                    F.when(
-                        F.col("out_wsum") > 0.0, F.col("_f") / F.col("out_wsum")
+        # ---- static vertex base: [id, out_wsum(, p_norm)], hash(id) -------
+        if precomputed_vertex_out_weight is not None:
+            ows = _renumber_values(graph, precomputed_vertex_out_weight, "out_wsum")
+            ows = (
+                graph.vertices()
+                .join(ows, VID, "left")
+                .fillna(0.0, ["out_wsum"])
+            )
+        else:
+            ows = graph.out_weight_sums()
+
+        pers = personalization is not None
+        if pers:
+            p = _renumber_values(graph, personalization, "p")
+            psum = p.agg(F.sum("p")).collect()[0][0]
+            ows = (
+                ows.join(p, VID, "left")
+                .fillna(0.0, ["p"])
+                .withColumn("p_norm", F.col("p") / F.lit(float(psum)))
+                .drop("p")
+            )
+        static_cols = ["out_wsum"] + (["p_norm"] if pers else [])
+
+        vbase = keyed(ows).repartition(n_part, VID).persist()
+        # one upfront scalar: whether any dangling vertices exist at all
+        has_dangling = vbase.filter(F.col("out_wsum") == 0.0).limit(1).count() > 0
+
+        # ---- fusion setup: static sink-flow columns (see docstring) -------
+        if fuse == "auto":
+            fuse = FUSE_AUTO_K if graph.number_of_edges() >= FUSE_MIN_EDGES else 1
+        fuse_k = max(1, int(fuse))
+        if pers:
+            fuse_k = 1
+        beta_cols: list = []
+        B: list = []  # B[m-1] = Σ_v β_m(v)
+        n_sinks = 0
+        beta_frames: list = []
+        beta_df = None  # static frame [id, β1..β_{k-1}]; joined into the state
+        # base so the block-start moments M_m = Σ rank·β_m fold into the SAME
+        # observe() that computes l1/dangling — no separate per-block join+agg
+        # job (a core-count-independent fixed cost that capped N→4N scaling).
+        # Cost: k-1 extra double columns ride through each checkpoint.
+        if fuse_k > 1 and has_dangling:
+            n_sinks = vbase.filter(F.col("out_wsum") == 0.0).count()
+            prev_beta = None
+            joined = vbase.select(VID)
+            for m in range(1, fuse_k):
+                name = f"_beta{m}"
+                if m == 1:
+                    sinks = vbase.filter(F.col("out_wsum") == 0.0).select(
+                        F.col(VID).alias(DST)
                     )
-                    .otherwise(F.lit(0.0))
-                    .alias(name),
-                ),
-                n_part,
-                VID,
+                    flow = (
+                        edges.join(sinks, DST, "left_semi")
+                        .groupBy(F.col(SRC).alias(VID))
+                        .agg(wsum(F.lit(1.0)).alias("_f"))
+                    )
+                else:
+                    bdst = prev_beta.select(
+                        F.col(VID).alias(DST), F.col(f"_beta{m-1}").alias("_pb")
+                    )
+                    flow = (
+                        edges.join(bdst, DST)
+                        .groupBy(F.col(SRC).alias(VID))
+                        .agg(wsum(F.col("_pb")).alias("_f"))
+                    )
+                beta_m = truncate_state(
+                    vbase.select(VID, "out_wsum")
+                    .join(flow, VID, "left")
+                    .fillna(0.0, ["_f"])
+                    .select(
+                        VID,
+                        F.when(
+                            F.col("out_wsum") > 0.0, F.col("_f") / F.col("out_wsum")
+                        )
+                        .otherwise(F.lit(0.0))
+                        .alias(name),
+                    ),
+                    n_part,
+                    VID,
+                )
+                beta_frames.append(beta_m)
+                beta_cols.append(name)
+                if m <= fuse_k - 2:
+                    B.append(float(beta_m.agg(F.sum(name)).collect()[0][0] or 0.0))
+                prev_beta = beta_m
+                joined = joined.join(beta_m, VID)
+            beta_df = truncate_state(joined, n_part, VID)
+            beta_frames.append(beta_df)
+            # fold the sink-flow columns into the static vertex base (both
+            # frames are hash(id)-partitioned, so this is a local zip join);
+            # the pre-join base joins the release list below
+            beta_frames.append(vbase)
+            vbase = vbase.join(beta_df, VID).persist()
+            static_cols = static_cols + beta_cols
+
+        # ---- initial state [id, *static, rank] ----------------------------
+        if nstart is not None:
+            r0 = keyed(_renumber_values(graph, nstart, "rank"))
+            rsum = r0.agg(F.sum("rank")).collect()[0][0]
+            state = (
+                vbase.join(r0, VID, "left")
+                .fillna(0.0, ["rank"])
+                .withColumn("rank", F.col("rank") / F.lit(float(rsum)))
             )
-            beta_frames.append(beta_m)
-            beta_cols.append(name)
-            if m <= fuse_k - 2:
-                B.append(float(beta_m.agg(F.sum(name)).collect()[0][0] or 0.0))
-            prev_beta = beta_m
-            joined = joined.join(beta_m, VID)
-        beta_df = truncate_state(joined, n_part, VID)
-        beta_frames.append(beta_df)
-        # fold the sink-flow columns into the static vertex base (both
-        # frames are hash(id)-partitioned, so this is a local zip join);
-        # the pre-join base joins the release list below
-        beta_frames.append(vbase)
-        vbase = vbase.join(beta_df, VID).persist()
-        static_cols = static_cols + beta_cols
+        else:
+            state = vbase.withColumn("rank", F.lit(1.0 / V))
 
-    # ---- initial state [id, *static, rank] --------------------------------
-    if nstart is not None:
-        r0 = _renumber_values(graph, nstart, "rank")
-        rsum = r0.agg(F.sum("rank")).collect()[0][0]
-        state = (
-            vbase.join(r0, VID, "left")
-            .fillna(0.0, ["rank"])
-            .withColumn("rank", F.col("rank") / F.lit(float(rsum)))
-        )
-    else:
-        state = vbase.withColumn("rank", F.lit(1.0 / V))
+        start_iter = 0
+        if checkpointer is not None:
+            resumed = checkpointer.resume(spark)
+            if resumed is not None:
+                start_iter, rdf = resumed
+                state = vbase.join(
+                    keyed(rdf.select(VID, "rank")).repartition(n_part, VID), VID
+                )
+        state = truncate_state(state, n_part, VID)
 
-    start_iter = 0
-    if checkpointer is not None:
-        resumed = checkpointer.resume(spark)
-        if resumed is not None:
-            start_iter, rdf = resumed
-            state = vbase.join(
-                rdf.select(VID, "rank").repartition(n_part, VID), VID
+        # dangling mass of the CURRENT ranks (scalar fold; skipped when no sinks
+        # exist — pagerank_impl.cuh:238-247); inside the loop this is maintained
+        # for free by the observe() on the previous materialization
+        if has_dangling:
+            dangling = (
+                state.filter(F.col("out_wsum") == 0.0).agg(F.sum("rank")).collect()[0][0]
+                or 0.0
             )
-    state = truncate_state(state, n_part, VID)
+        else:
+            dangling = 0.0
 
-    # dangling mass of the CURRENT ranks (scalar fold; skipped when no sinks
-    # exist — pagerank_impl.cuh:238-247); inside the loop this is maintained
-    # for free by the observe() on the previous materialization
-    if has_dangling:
-        dangling = (
-            state.filter(F.col("out_wsum") == 0.0).agg(F.sum("rank")).collect()[0][0]
-            or 0.0
-        )
-    else:
-        dangling = 0.0
+        converged = False
+        iterations = start_iter
+        l1_history: list = []
+        iter_secs: list = []
 
-    # ---- narrow edge frame for the gather loop ----------------------------
-    # The per-superstep E-row gather is memory-bandwidth-bound at high core
-    # counts (profiled at R-MAT scale 23: 4 sequential join+groupBy stages
-    # dominate each fused block), so bytes scanned per edge are the scaling
-    # lever: internal vertex ids are dense, so they fit int whenever
-    # V < 2^31 (halves the id columns), and an unweighted graph's constant
-    # 1.0 weight column is dropped entirely (the gather then sums contrib
-    # directly).  24 B/edge -> 8 B/edge on the unweighted renumbered path.
-    # External semantics unchanged: ranks re-join the long-keyed state.
-    narrow_ids = V < (1 << 31)
-    w_mult = graph.properties.weighted
-    edges_owned = narrow_ids or not w_mult
-    if edges_owned:
-        _id = (lambda c: F.col(c).cast("int")) if narrow_ids else F.col
-        ecols = [_id(SRC).alias(SRC), _id(DST).alias(DST)]
-        if w_mult:
-            ecols.append(F.col(WGT))
-        # truncate_state, not a bare persist: a lazy persist leaves the
-        # frame's sizeInBytes as a chained ESTIMATE that every superstep
-        # referencing `edges` compounds until Catalyst's BigInteger
-        # overflows (~iteration 60; see truncate_state's postmortem).  The
-        # eager localCheckpoint pins runtime-exact stats once, up front.
-        edges = truncate_state(graph.edges.select(*ecols), n_part, SRC)
-    else:
-        edges = graph.edges  # [src, dst, weight] partitioned by src
-    key_t = "int" if narrow_ids else "long"
-    converged = False
-    iterations = start_iter
-    l1_history: list = []
-    iter_secs: list = []
-
-    single_mode = fuse_k == 1
-    T_next: list | None = None  # block-start moments carried from observe
-    # AQE off for the big-graph loop: coalescing folds the gather's shuffle
-    # below the slot count and per-stage re-planning adds core-count-
-    # independent latency (see static_plan; measured 6.67 -> 3.78 s/iter at
-    # scale 23 on local[32]).  Small graphs keep AQE: coalescing sub-second
-    # tasks is a win there -- same threshold economics as fuse='auto'.
-    with static_plan(spark, enabled=graph.number_of_edges() >= FUSE_MIN_EDGES):
+        single_mode = fuse_k == 1
+        T_next: list | None = None  # block-start moments carried from observe
         while iterations < max_iter:
             k = 1 if single_mode else min(fuse_k, max_iter - iterations)
             _t0 = time.time()
@@ -328,24 +347,19 @@ def pagerank(
             # pre-divide (pagerank_impl:249-261): contribution = rank/out_wsum;
             # SHUFFLE_HASH everywhere — at web scale no V-row frame may funnel
             # through the driver, and both state-side joins are already
-            # hash(id)-partitioned so the E-row groupBy is the only real
-            # exchange per step
+            # hash(id)-partitioned on the edges' key type, so the E-row
+            # groupBy is the only real exchange per step
             cur = state
             new_state = None
             for j in range(k):
                 contribs = cur.filter(F.col("out_wsum") > 0.0).select(
-                    F.col(VID).cast(key_t).alias(SRC),
+                    F.col(VID).alias(SRC),
                     (F.col("rank") / F.col("out_wsum")).alias("contrib"),
-                )
-                gather_expr = (
-                    F.sum(F.col("contrib") * F.col(WGT))
-                    if w_mult
-                    else F.sum("contrib")
                 )
                 gathered = (
                     edges.join(contribs.hint("shuffle_hash"), SRC)
                     .groupBy(F.col(DST).alias(VID))
-                    .agg(gather_expr.alias("gather"))
+                    .agg(wsum(F.col("contrib")).alias("gather"))
                 )
                 if not pers:
                     new_rank = F.lit(alpha) * F.col("gather") + F.lit(c_js[j])
@@ -385,9 +399,8 @@ def pagerank(
                         )
                         .drop("_old")
                     )
-            # re-key by id: the stats-neutral rebuild inside truncate_state
-            # loses partitioning knowledge, so re-establish hash(id) here — one
-            # V-row exchange folded into the materialization job
+            # hash(id): the planner drops this repartition when the plan
+            # already ends hash(id)-partitioned (the gather join does)
             new_state = truncate_state(new_state, n_part, VID)
             metrics = obs.get
             l1 = float(metrics["l1"] or 0.0)  # k-step delta when k > 1
@@ -406,7 +419,9 @@ def pagerank(
 
             if checkpointer is not None:
                 checkpointer.save(
-                    state.select(VID, "rank"), iterations, {"l1": l1, "dangling": dangling}
+                    state.select(F.col(VID).cast("long").alias(VID), "rank"),
+                    iterations,
+                    {"l1": l1, "dangling": dangling},
                 )
 
             if tol > 0:
@@ -425,7 +440,9 @@ def pagerank(
             f"PageRank failed to converge in {max_iter} iterations (L1={l1_history[-1]})"
         )
 
-    out = state.select(F.col(VID).alias("vertex"), F.col("rank").alias("pagerank"))
+    out = state.select(
+        F.col(VID).cast("long").alias("vertex"), F.col("rank").alias("pagerank")
+    )
     if unrenumber:
         out = graph.unrenumber(out, "vertex")
     if edges_owned:
@@ -436,6 +453,12 @@ def pagerank(
     return PageRankResult(
         out, converged, iterations, l1_history, iter_secs=iter_secs, _state=state
     )
+
+
+def _raw_ids_fit_int(edges: DataFrame) -> bool:
+    """Whether every vertex id of an edge frame lies in the int range."""
+    lo, hi = edges.agg(F.min(F.least(SRC, DST)), F.max(F.greatest(SRC, DST))).first()
+    return lo is None or (-(1 << 31) <= lo and hi < (1 << 31))
 
 
 def _renumber_values(graph: LinkGraph, df: DataFrame, value_name: str) -> DataFrame:

@@ -23,6 +23,7 @@ not corpus wedges), and hub wedge centers are salted across
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,7 +44,18 @@ from ..graph import DST, SRC, VID, LinkGraph, truncate_state
 # pairs, ``jaccard.py:23-209``); salting fixes the per-task skew, not the
 # output size — callers with a hub-heavy graph should pass ``vertex_pair``,
 # which now prunes the wedge legs BEFORE the join (see ``_pair_stats``).
-WEDGE_HOT_DEGREE = int(os.environ.get("SPARK_GRAFT_WEDGE_HOT_DEGREE", "8192"))
+def _hot_degree(default: int = 8192) -> int:
+    """``SPARK_GRAFT_WEDGE_HOT_DEGREE`` if it is a positive integer, else
+    ``default`` with a warning: a bad value must not break the import."""
+    raw = os.environ.get("SPARK_GRAFT_WEDGE_HOT_DEGREE", str(default)).strip()
+    if raw.isdecimal() and int(raw) > 0:
+        return int(raw)
+    msg = f"SPARK_GRAFT_WEDGE_HOT_DEGREE={raw!r} is not a positive integer; using {default}"
+    warnings.warn(msg, RuntimeWarning, stacklevel=2)
+    return default
+
+
+WEDGE_HOT_DEGREE = _hot_degree()
 WEDGE_SALT_CAP = 1024
 
 

@@ -49,7 +49,6 @@ from ..graph import (
     DST,
     EXT,
     SRC,
-    STATIC_PLAN_MIN_EDGES,
     VID,
     WGT,
     LinkGraph,
@@ -114,7 +113,7 @@ def _spectral_embedding(
         VID,
     )
     prev_ev = None
-    with static_plan(spark, enabled=graph.number_of_edges() >= STATIC_PLAN_MIN_EDGES):
+    with static_plan(spark):
         for _ in range(max_iter):
             if variant == "modularity":
                 s_row = state.agg(

@@ -26,15 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..graph import (
-    DST,
-    SRC,
-    STATIC_PLAN_MIN_EDGES,
-    VID,
-    LinkGraph,
-    static_plan,
-    truncate_state,
-)
+from ..graph import DST, SRC, VID, LinkGraph, static_plan, truncate_state
 
 
 def weakly_connected_components(
@@ -60,20 +52,20 @@ def weakly_connected_components(
         edges = graph.edges.select(SRC, DST)
         owned_edges = False
 
-    labels = graph.vertices().withColumn("label", F.col(VID))
-    labels = truncate_state(labels, n_part, VID)
+    # AQE off: it would run each shuffle stage of a round as its own job,
+    # and state checkpointed under it loses its hash partitioning (see
+    # static_plan).
+    with static_plan(spark):
+        labels = graph.vertices().withColumn("label", F.col(VID))
+        labels = truncate_state(labels, n_part, VID)
 
-    start_iter = 0
-    if checkpointer is not None:
-        resumed = checkpointer.resume(spark)
-        if resumed is not None:
-            start_iter, labels = resumed
-            labels = truncate_state(labels, n_part, VID)
+        start_iter = 0
+        if checkpointer is not None:
+            resumed = checkpointer.resume(spark)
+            if resumed is not None:
+                start_iter, labels = resumed
+                labels = truncate_state(labels, n_part, VID)
 
-    # AQE off for big-graph loops, same economics as pagerank's superstep
-    # gate (see static_plan): post-shuffle coalescing folds the per-round
-    # gather below the slot count at high core counts.
-    with static_plan(spark, enabled=graph.number_of_edges() >= STATIC_PLAN_MIN_EDGES):
         for it in range(start_iter, max_iter):
             nbr_min = (
                 edges.join(

@@ -69,10 +69,10 @@ heap_gb = int(sys.argv[4])
 # 4x-cores partitions cost the 32-core leg ~2x per superstep (scheduling +
 # AQE re-planning overhead at ~100 ms tasks dwarfs any skew-dilution gain —
 # AQE's skew-join splitting already handles the R-MAT hubs).  AQE itself is
-# managed by the ENGINE: pagerank disables it inside the superstep loop for
-# graphs >= 20M edges (static_plan) — AQE's post-shuffle coalescing folds
-# the gather below the slot count, idling cores on exactly the big leg
-# (measured at scale 23: 6.67 -> 3.78 s/iter on local[32] with it off).
+# managed by the ENGINE: every superstep loop runs with it off (static_plan)
+# — AQE's post-shuffle coalescing folds the gather below the slot count,
+# idling cores on exactly the big leg (measured at scale 23: 6.67 -> 3.78
+# s/iter on local[32] with it off).
 # -Xms == -Xmx: heap-growth pauses otherwise land as multi-second superstep
 # outliers.  AllocateHeapAt=/dev/shm backs the heap with shmem pages: this
 # sandbox's hypervisor provisions anonymous pages at ~30 MB/s first-touch

@@ -10,6 +10,9 @@ jaccard.py:23-209`` defaults to ``get_two_hop_neighbors()``)."""
 from __future__ import annotations
 
 import itertools
+import os
+import subprocess
+import sys
 
 import networkx as nx
 import pytest
@@ -139,3 +142,20 @@ def test_vertex_pair_prunes_wedge_legs(spark):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
     g.unpersist()
+
+
+@pytest.mark.parametrize("raw", ["8k", "-3"])
+def test_bad_hot_degree_env_falls_back(raw):
+    """A malformed SPARK_GRAFT_WEDGE_HOT_DEGREE warns and falls back to
+    8192 instead of raising at import (fresh interpreter: the value is
+    read once, at import)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "from cugraph_spark.operators import similarity as s; print(s.WEDGE_HOT_DEGREE)"],
+        cwd=root, capture_output=True, text=True, timeout=120,
+        env={**os.environ, "SPARK_GRAFT_WEDGE_HOT_DEGREE": raw},
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert proc.stdout.strip() == "8192"
+    assert "SPARK_GRAFT_WEDGE_HOT_DEGREE" in proc.stderr and "RuntimeWarning" in proc.stderr
