@@ -43,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import DST, SRC, VID, WGT, LinkGraph
+from .graph import DST, SRC, VID, WGT, LinkGraph, superstep_loop, truncate_state
 
 CSR_SCHEMA = (
     "pid long, vids array<long>, offsets array<long>, indices array<long>, "
@@ -192,9 +192,6 @@ def pagerank_csr(
     volumes as the DataFrame superstep, plus an Arrow boundary crossing —
     see module docstring and BENCH.md for the measured comparison.
     """
-    from .graph import truncate_state
-
-    spark = graph.spark
     n_part = num_partitions or graph.num_partitions
     V = graph.number_of_vertices()
 
@@ -216,12 +213,13 @@ def pagerank_csr(
             F.coalesce(F.col("out_w"), F.lit(0.0)).alias("out_w"),
         )
     )
-    state = truncate_state(state, n_part, VID)
+    # the initial dangling mass; each step's observe folds the next one
+    dangling0 = state.filter(F.col("out_w") == 0.0).agg(
+        F.coalesce(F.sum("rank"), F.lit(0.0))
+    ).collect()[0][0]
 
-    for _ in range(max_iter):
-        dangling = state.filter(F.col("out_w") == 0.0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0))
-        ).collect()[0][0]
+    def step(state: DataFrame, report):
+        dangling = report.metrics[-1]["dangling"] if report.metrics else dangling0
         contribs = state.filter(F.col("out_w") > 0.0).select(
             VID, (F.col("rank") / F.col("out_w")).alias("value")
         )
@@ -229,7 +227,7 @@ def pagerank_csr(
         const = (dangling * alpha + (1.0 - alpha)) / V
         new_state = (
             state.select(VID, F.col("rank").alias("_old"), "out_w")
-            .join(gathered.withColumnRenamed("dst", VID), VID, "left")
+            .join(gathered.withColumnRenamed("dst", VID).hint("shuffle_hash"), VID, "left")
             .select(
                 VID,
                 (F.coalesce(F.col("gathered"), F.lit(0.0)) * alpha + const).alias(
@@ -239,12 +237,21 @@ def pagerank_csr(
                 "out_w",
             )
         )
-        new_state = truncate_state(new_state, n_part, VID)
-        l1 = new_state.agg(F.sum(F.abs(F.col("rank") - F.col("_old")))).collect()[0][0]
-        state.unpersist()
-        state = new_state.drop("_old")
-        if l1 < tol:
-            break
+        return new_state, [
+            F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("l1"),
+            F.sum(F.when(F.col("out_w") == 0.0, F.col("rank")).otherwise(0.0)).alias(
+                "dangling"
+            ),
+        ]
+
+    state, _ = superstep_loop(
+        state,
+        step,
+        lambda m: m["l1"] < tol,
+        lambda df: truncate_state(df, n_part, VID),
+        max_iter,
+        n_part,
+    )
 
     csr.unpersist()
     out = state.select(F.col(VID).alias("vertex"), F.col("rank").alias("pagerank"))

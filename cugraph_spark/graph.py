@@ -24,10 +24,12 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -85,8 +87,9 @@ def truncate_state(
 
 
 @contextmanager
-def static_plan(spark: SparkSession):
-    """Disable AQE for a statically-partitioned iterative section.
+def static_plan(spark: SparkSession, num_partitions: int):
+    """Disable AQE and pin the shuffle count for a statically-partitioned
+    iterative section.
 
     The superstep plans (PageRank/WCC/LPA gathers) fix their partitioning
     explicitly — every exchange is a hash repartition the engine chose, and
@@ -102,16 +105,87 @@ def static_plan(spark: SparkSession):
     6.67 → 3.78 s/superstep with AQE off).  Loops therefore enter it before
     they checkpoint their first state.
 
-    Restore-on-exit keeps the session's AQE default for everything outside
-    the loop.
+    The shuffle count is pinned to ``num_partitions``, the state's hash
+    partitioning, so a gather's groupBy lands on the state's layout (with
+    another session count a PageRank superstep ran 3 exchanges, not 1).
+    Restore-on-exit keeps the session's settings outside the loop.
     """
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    prev = [spark.conf.get(key) for key in keys]
+    spark.conf.set(keys[0], "false")
+    spark.conf.set(keys[1], str(num_partitions))
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        for key, value in zip(keys, prev):
+            spark.conf.set(key, value)
+
+
+@dataclass
+class RunReport:
+    """What :func:`superstep_loop` did: supersteps (resumed ones included),
+    whether it converged, each step's observed scalars and each
+    superstep's wall seconds."""
+
+    iterations: int = 0
+    converged: bool = False
+    metrics: list = field(default_factory=list)
+    step_secs: list = field(default_factory=list)
+
+
+def superstep_loop(
+    state: DataFrame,
+    step: Callable,
+    converged: Callable,
+    materialize: Callable,
+    max_iter: int,
+    num_partitions: int,
+    checkpointer=None,
+    resume: Callable = lambda df: df,
+    saved: Callable = lambda df: df,
+) -> tuple:
+    """The one fixed-point driver: returns ``(state, RunReport)``.
+
+    It enters :func:`static_plan` before the first materialization; with a
+    ``checkpointer`` it resumes from the newest checkpoint (mapped through
+    ``resume``; the iteration count continues from it) and saves
+    ``saved(state)`` with the step's scalars after each step.
+    ``materialize`` runs on the initial state and on each step's plan; an
+    operator passes a function of its own module that calls
+    ``truncate_state`` by that module's name, which the benchmark and tests
+    patch to count supersteps.  ``step(state, report)`` returns ``(plan,
+    aggs[, k])``: the plan advances k supersteps (default 1), and the
+    aggregate Columns fold into its materialization via ``observe`` (no
+    extra job), after which a ``_old`` column is dropped.  The old state is
+    unpersisted once the new one exists; ``converged(scalars)`` (a None
+    scalar reads 0) stops the loop.
+    """
+    spark = state.sparkSession
+    report = RunReport()
+    with static_plan(spark, num_partitions):
+        resumed = checkpointer.resume(spark) if checkpointer is not None else None
+        if resumed is not None:
+            report.iterations, df = resumed
+            state = resume(df)
+        state = materialize(state)
+        while report.iterations < max_iter:
+            t0 = time.time()
+            plan, aggs, *k = step(state, report)
+            k = k[0] if k else 1
+            obs = Observation()
+            new_state = materialize(plan.observe(obs, *aggs).drop("_old"))
+            metrics = {key: 0 if v is None else v for key, v in obs.get.items()}
+            state.unpersist()
+            state = new_state
+            report.iterations += k
+            report.metrics.append(metrics)
+            report.step_secs.extend([(time.time() - t0) / k] * k)
+            if checkpointer is not None:
+                checkpointer.save(saved(state), report.iterations, metrics)
+            if converged(metrics):
+                report.converged = True
+                break
+    return state, report
 
 
 @dataclass

@@ -11,9 +11,12 @@ Reference parity:
 - eigenvector: ``centrality/eigenvector_centrality.py:26-112`` — power
   iteration with L2 normalization.
 
-All four are the same superstep shape as PageRank (SURVEY §2.1): the
-persisted src-partitioned edge table joins the V-row state, groupBy-sum
-gathers, scalar aggs fold; localCheckpoint per iteration cuts lineage.
+The three iterative ones are the same superstep shape as PageRank (SURVEY
+§2.1): the persisted src-partitioned edge table joins the V-row state,
+groupBy-sum gathers, scalar aggs fold; ``truncate_state`` per iteration
+cuts lineage.  Katz runs on ``graph.superstep_loop``; HITS and eigenvector
+normalize the state after each materialization, so they keep their own
+loops.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..graph import DST, SRC, VID, WGT, LinkGraph, truncate_state
+from ..graph import DST, SRC, VID, WGT, LinkGraph, superstep_loop, truncate_state
 
 
 def degree_centrality(graph: LinkGraph, normalized: bool = True) -> DataFrame:
@@ -170,38 +173,33 @@ def katz_centrality(
         )
         alpha = 1.0 / (dmax + 1.0)
 
-    x = graph.vertices().select(VID, F.lit(0.0).alias("x"))
-    x = truncate_state(x, n_part, VID)
+    V = graph.number_of_vertices()
 
-    for it in range(max_iter):
+    def step(x: DataFrame, _report):
         gathered = (
-            edges.join(x.select(F.col(VID).alias(SRC), "x"), SRC)
+            edges.join(x.select(F.col(VID).alias(SRC), "x").hint("shuffle_hash"), SRC)
             .groupBy(F.col(DST).alias(VID))
             .agg(F.sum(F.col("x") * F.col(WGT)).alias("g"))
         )
-        # carry the old value through the join and fold the L1 delta into
-        # the same materialization job via observe (pagerank's pattern —
-        # the separate delta collect cost an extra job per iteration)
-        obs = Observation(f"katz_iter_{it}")
-        new_x = truncate_state(
+        # carry the old value through the join; the L1 delta folds into
+        # the materialization job (a separate delta collect cost an extra
+        # job per iteration)
+        new_x = (
             x.select(VID, F.col("x").alias("_old"))
             .join(gathered.hint("shuffle_hash"), VID, "left")
             .fillna(0.0, ["g"])
-            .select(
-                VID,
-                (F.lit(alpha) * F.col("g") + F.lit(beta)).alias("x"),
-                "_old",
-            )
-            .observe(obs, F.sum(F.abs(F.col("x") - F.col("_old"))).alias("delta"))
-            .drop("_old"),
-            n_part,
-            VID,
+            .select(VID, (F.lit(alpha) * F.col("g") + F.lit(beta)).alias("x"), "_old")
         )
-        delta = float(obs.get["delta"] or 0.0)
-        x.unpersist()
-        x = new_x
-        if delta < tol * graph.number_of_vertices():
-            break
+        return new_x, [F.sum(F.abs(F.col("x") - F.col("_old"))).alias("delta")]
+
+    x, _ = superstep_loop(
+        graph.vertices().select(VID, F.lit(0.0).alias("x")),
+        step,
+        lambda m: m["delta"] < tol * V,
+        lambda df: truncate_state(df, n_part, VID),
+        max_iter,
+        n_part,
+    )
 
     l2 = x.agg(F.sqrt(F.sum(F.col("x") * F.col("x")))).collect()[0][0] or 1.0
     out = x.select(

@@ -212,7 +212,7 @@ def force_atlas2(
             f"exact repulsion is O(V^2); refusing V={n_v} > {_EXACT_MAX_V} "
             "(set barnes_hut_optimize=True for the grid far-field path)"
         )
-    with static_plan(spark):
+    with static_plan(spark, n_part):
         for it in range(max_iter):
             n_bins = max(4, min(64, int(math.sqrt(max(n_v, 1) / target_occupancy)) + 1))
             cx, cy = _grid_keys(xmin, xmax, ymin, ymax, n_bins)

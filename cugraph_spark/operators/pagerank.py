@@ -26,15 +26,11 @@ Spark plan per superstep — ONE job, one real shuffle:
   hash(id) for the state join, so the only exchange is the groupBy(dst)
   of the E-row contribution stream (a cast key on either join side would
   add one exchange each).
-- the loop runs under ``static_plan`` (AQE off): AQE would run each
-  shuffle stage as its own job.
-- the L1 delta and the NEXT iteration's dangling mass are computed via
-  ``DataFrame.observe`` on the same plan that materializes the new state —
-  scalar folds cost zero extra jobs (the dangling sum uses the new ranks,
-  which is exactly what iteration i+1 needs per ``pagerank_impl.cuh:238``).
-- per-iteration ``truncate_state`` (persist + eager localCheckpoint, one
-  job) keeps the plan flat and plan-time cost constant at any iteration
-  count (see ``graph.truncate_state``).
+- the loop is ``graph.superstep_loop`` (AQE off, one ``truncate_state``
+  per materialization, checkpoint/resume): the L1 delta and the NEXT
+  iteration's dangling mass fold into the plan that materializes the new
+  state via its ``observe`` (the dangling sum uses the new ranks, which is
+  exactly what iteration i+1 needs per ``pagerank_impl.cuh:238``).
 - ``fuse=k`` chains k supersteps into one materialization so the
   core-count-independent per-materialization costs amortize — the lever
   for N→4N scaling efficiency; intermediate dangling masses come from an
@@ -44,13 +40,21 @@ Spark plan per superstep — ONE job, one real shuffle:
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import DST, SRC, VID, WGT, LinkGraph, static_plan, truncate_state
+from ..graph import (
+    DST,
+    SRC,
+    VID,
+    WGT,
+    LinkGraph,
+    static_plan,
+    superstep_loop,
+    truncate_state,
+)
 
 # fuse="auto" engages fusion only at/above this edge count: below it the
 # beta-frame builds + block overshoot cost more than the amortized
@@ -130,7 +134,7 @@ def pagerank(
     # stage of a superstep as its own job, and a frame checkpointed under
     # it loses its hash partitioning, so every superstep would re-shuffle
     # the edges (see static_plan).
-    with static_plan(spark):
+    with static_plan(spark, n_part):
         # ---- narrow edge frame for the gather loop ------------------------
         # The per-superstep E-row gather is memory-bandwidth-bound at high core
         # counts (profiled at R-MAT scale 23: 4 sequential join+groupBy stages
@@ -280,68 +284,43 @@ def pagerank(
         else:
             state = vbase.withColumn("rank", F.lit(1.0 / V))
 
-        start_iter = 0
-        if checkpointer is not None:
-            resumed = checkpointer.resume(spark)
-            if resumed is not None:
-                start_iter, rdf = resumed
-                state = vbase.join(
-                    keyed(rdf.select(VID, "rank")).repartition(n_part, VID), VID
-                )
-        state = truncate_state(state, n_part, VID)
-
-        # dangling mass of the CURRENT ranks (scalar fold; skipped when no sinks
-        # exist — pagerank_impl.cuh:238-247); inside the loop this is maintained
-        # for free by the observe() on the previous materialization
-        if has_dangling:
-            dangling = (
-                state.filter(F.col("out_wsum") == 0.0).agg(F.sum("rank")).collect()[0][0]
-                or 0.0
-            )
-        else:
-            dangling = 0.0
-
-        converged = False
-        iterations = start_iter
-        l1_history: list = []
-        iter_secs: list = []
+        def scalars() -> list:
+            """Dangling mass of the current ranks (pagerank_impl.cuh:238-247)
+            and the sink-flow moments M_m = Σ rank·β_m: each step's observe
+            folds them for the next one, so only the first step may pay a
+            scalar job (none without sinks)."""
+            dangling = F.when(F.col("out_wsum") == 0.0, F.col("rank")).otherwise(0.0)
+            return [F.sum(dangling).alias("dangling")] + [
+                F.sum(F.col("rank") * F.col(c)).alias(f"_m{m}")
+                for m, c in enumerate(beta_cols)
+            ]
 
         single_mode = fuse_k == 1
-        T_next: list | None = None  # block-start moments carried from observe
-        while iterations < max_iter:
-            k = 1 if single_mode else min(fuse_k, max_iter - iterations)
-            _t0 = time.time()
+        k = 1  # supersteps the current block advances
 
-            # ---- block-start scalars: the constant term of every step in the
-            # block, derived via the sink-flow recurrence (see docstring);
-            # moments come from the PREVIOUS block's observe — only the very
-            # first fused block pays a scalar fold job
-            if k > 1 and has_dangling:
-                if T_next is None:
-                    T_next = [
-                        float(x or 0.0)
-                        for x in state.agg(
-                            *[F.sum(F.col("rank") * F.col(c)) for c in beta_cols]
-                        ).collect()[0]
-                    ]
-                T = T_next[: k - 1]
+        def step(state: DataFrame, report):
+            nonlocal k
+            k = 1 if single_mode else min(fuse_k, max_iter - report.iterations)
+            if report.metrics:
+                prev = report.metrics[-1]
+            elif has_dangling:
+                prev = state.agg(*scalars()).first().asDict()
             else:
-                T = []
+                prev = {"dangling": 0.0}
+            dangling = float(prev["dangling"])
+            # ---- block-start scalars: the constant term of every step in the
+            # block, derived via the sink-flow recurrence (see docstring)
+            T = [float(prev[f"_m{m}"]) for m in range(k - 1)] if has_dangling else []
             c_js = []
             d_j = dangling
             for j in range(k):
                 c_j = (alpha * d_j + (1.0 - alpha)) / V
                 c_js.append(c_j)
-                if j < k - 1:
-                    if has_dangling:
-                        # d_{j+1} = α·Σ_v r_j·β_1 + c_j·n_sinks, with
-                        # T_{j+1}^m = α·T_j^{m+1} + c_j·B_m
-                        d_j = alpha * T[0] + c_j * n_sinks
-                        T = [
-                            alpha * T[m + 1] + c_j * B[m] for m in range(len(T) - 1)
-                        ]
-                    else:
-                        d_j = 0.0
+                if j < k - 1 and has_dangling:
+                    # d_{j+1} = α·Σ_v r_j·β_1 + c_j·n_sinks, with
+                    # T_{j+1}^m = α·T_j^{m+1} + c_j·B_m
+                    d_j = alpha * T[0] + c_j * n_sinks
+                    T = [alpha * T[m + 1] + c_j * B[m] for m in range(len(T) - 1)]
 
             # ---- fused plan: k chained gathers, ONE materialization ----------
             # pre-divide (pagerank_impl:249-261): contribution = rank/out_wsum;
@@ -350,7 +329,6 @@ def pagerank(
             # hash(id)-partitioned on the edges' key type, so the E-row
             # groupBy is the only real exchange per step
             cur = state
-            new_state = None
             for j in range(k):
                 contribs = cur.filter(F.col("out_wsum") > 0.0).select(
                     F.col(VID).alias(SRC),
@@ -375,69 +353,47 @@ def pagerank(
                         .fillna(0.0, ["gather"])
                         .select(VID, "out_wsum", new_rank.alias("rank"))
                     )
-                else:
-                    obs = Observation(f"pagerank_iter_{iterations}_{k}")
-                    new_state = (
-                        state.select(VID, *static_cols, F.col("rank").alias("_old"))
-                        .join(gathered.hint("shuffle_hash"), VID, "left")
-                        .fillna(0.0, ["gather"])
-                        .select(VID, *static_cols, new_rank.alias("rank"), F.col("_old"))
-                        .observe(
-                            obs,
-                            F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("l1"),
-                            F.sum(
-                                F.when(F.col("out_wsum") == 0.0, F.col("rank")).otherwise(
-                                    0.0
-                                )
-                            ).alias("dangling"),
-                            # next block's moments M_m = Σ rank·β_m — free on
-                            # this materialization instead of a dedicated job
-                            *[
-                                F.sum(F.col("rank") * F.col(c)).alias(f"_m{m}")
-                                for m, c in enumerate(beta_cols)
-                            ],
-                        )
-                        .drop("_old")
-                    )
-            # hash(id): the planner drops this repartition when the plan
-            # already ends hash(id)-partitioned (the gather join does)
-            new_state = truncate_state(new_state, n_part, VID)
-            metrics = obs.get
-            l1 = float(metrics["l1"] or 0.0)  # k-step delta when k > 1
-            dangling = float(metrics["dangling"] or 0.0) if has_dangling else 0.0
-            if beta_cols:
-                T_next = [
-                    float(metrics[f"_m{m}"] or 0.0) for m in range(len(beta_cols))
-                ]
+            plan = (
+                state.select(VID, *static_cols, F.col("rank").alias("_old"))
+                .join(gathered.hint("shuffle_hash"), VID, "left")
+                .fillna(0.0, ["gather"])
+                .select(VID, *static_cols, new_rank.alias("rank"), F.col("_old"))
+            )
+            l1 = F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("l1")
+            return plan, [l1, *scalars()], k
 
-            state.unpersist()
-            state = new_state
-            iterations += k
-            l1_history.append(l1)
-            dt = time.time() - _t0
-            iter_secs.extend([dt / k] * k)
+        def converged(m: dict) -> bool:
+            nonlocal single_mode
+            if tol <= 0:
+                return False
+            if k > 1 and m["l1"] < tol * k * 10:
+                # near convergence: hand off to exact single-step checks so
+                # the stopping criterion is the reference's per-iteration L1
+                single_mode = True
+            return k == 1 and m["l1"] < tol
 
-            if checkpointer is not None:
-                checkpointer.save(
-                    state.select(F.col(VID).cast("long").alias(VID), "rank"),
-                    iterations,
-                    {"l1": l1, "dangling": dangling},
-                )
+        # hash(id): the planner drops the repartition when the plan already
+        # ends hash(id)-partitioned (the gather join does)
+        state, report = superstep_loop(
+            state,
+            step,
+            converged,
+            lambda df: truncate_state(df, n_part, VID),
+            max_iter,
+            n_part,
+            checkpointer=checkpointer,
+            resume=lambda rdf: vbase.join(
+                keyed(rdf.select(VID, "rank")).repartition(n_part, VID), VID
+            ),
+            saved=lambda df: df.select(F.col(VID).cast("long").alias(VID), "rank"),
+        )
 
-            if tol > 0:
-                if k == 1 and l1 < tol:
-                    converged = True
-                    break
-                if k > 1 and l1 < tol * k * 10:
-                    # near convergence: hand off to exact single-step checks so
-                    # the stopping criterion is the reference's per-iteration L1
-                    single_mode = True
-
-    if tol <= 0:
-        converged = True
+    l1_history = [float(m["l1"]) for m in report.metrics]  # k-step L1 if fused
+    converged = report.converged or tol <= 0
     if not converged and fail_on_nonconvergence:
+        last = f"L1={l1_history[-1]}" if l1_history else "no superstep ran"
         raise RuntimeError(
-            f"PageRank failed to converge in {max_iter} iterations (L1={l1_history[-1]})"
+            f"PageRank failed to converge in {max_iter} iterations ({last})"
         )
 
     out = state.select(
@@ -451,7 +407,12 @@ def pagerank(
     for bf in beta_frames:
         bf.unpersist()
     return PageRankResult(
-        out, converged, iterations, l1_history, iter_secs=iter_secs, _state=state
+        out,
+        converged,
+        report.iterations,
+        l1_history,
+        iter_secs=report.step_secs,
+        _state=state,
     )
 
 

@@ -113,7 +113,7 @@ def _spectral_embedding(
         VID,
     )
     prev_ev = None
-    with static_plan(spark):
+    with static_plan(spark, n_part):
         for _ in range(max_iter):
             if variant == "modularity":
                 s_row = state.agg(

@@ -14,7 +14,8 @@ reference tests also allow (``tests/components/test_connectivity.py:322-342``).
 
 Spark plan per round: one join (labels→edges by src, big side pre-partitioned
 and persisted, never re-shuffled) + one groupBy(dst).min + a least() merge;
-per-round localCheckpoint cuts lineage. A 'shortcut' pointer-jumping round
+the changed-label count folds into the same materialization, and the loop
+is ``graph.superstep_loop``. A 'shortcut' pointer-jumping round
 (label ← label-of-label) is applied each sweep, collapsing long chains so
 rounds = O(log diameter) instead of O(diameter) — this stays within the
 hash-min family (min is still the combiner) but is essential at web scale
@@ -23,10 +24,10 @@ where chain-shaped link paths are common.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import DST, SRC, VID, LinkGraph, static_plan, truncate_state
+from ..graph import DST, SRC, VID, LinkGraph, superstep_loop, truncate_state
 
 
 def weakly_connected_components(
@@ -39,91 +40,84 @@ def weakly_connected_components(
     """Return DF[vertex, labels] — labels = min internal id per component,
     mapped back to external ids when the graph is renumbered."""
     n_part = graph.num_partitions
-    spark = graph.spark
+    # symmetrize view for connectivity only (impl.cuh:285-287)
+    edges, owned_edges = _undirected_pairs(graph)
 
-    if graph.properties.directed:
-        # symmetrize view for connectivity only (impl.cuh:285-287)
-        fwd = graph.edges.select(SRC, DST)
-        rev = graph.edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-        edges = fwd.union(rev).distinct().repartition(n_part, SRC).persist()
-        edges.count()
-        owned_edges = True
-    else:
-        edges = graph.edges.select(SRC, DST)
-        owned_edges = False
-
-    # AQE off: it would run each shuffle stage of a round as its own job,
-    # and state checkpointed under it loses its hash partitioning (see
-    # static_plan).
-    with static_plan(spark):
-        labels = graph.vertices().withColumn("label", F.col(VID))
-        labels = truncate_state(labels, n_part, VID)
-
-        start_iter = 0
-        if checkpointer is not None:
-            resumed = checkpointer.resume(spark)
-            if resumed is not None:
-                start_iter, labels = resumed
-                labels = truncate_state(labels, n_part, VID)
-
-        for it in range(start_iter, max_iter):
-            nbr_min = (
-                edges.join(
-                    labels.select(F.col(VID).alias(SRC), "label").hint("shuffle_hash"), SRC
-                )
-                .groupBy(F.col(DST).alias(VID))
-                .agg(F.min("label").alias("nbr_label"))
+    def step(labels: DataFrame, _report):
+        nbr_min = (
+            edges.join(
+                labels.select(F.col(VID).alias(SRC), "label").hint("shuffle_hash"), SRC
+            )
+            .groupBy(F.col(DST).alias(VID))
+            .agg(F.min("label").alias("nbr_label"))
+        )
+        new_labels = (
+            labels.select(VID, F.col("label").alias("_old"))
+            .join(nbr_min.hint("shuffle_hash"), VID, "left")
+            .select(
+                VID,
+                F.least(F.col("_old"), F.coalesce(F.col("nbr_label"), F.col("_old"))).alias("label"),
+                F.col("_old"),
+            )
+        )
+        if shortcutting:
+            # pointer jumping: label ← label(label). label ids are vertex ids,
+            # so one self-join against the fresh labels collapses chains;
+            # shuffle_hash keeps it in the round's one job (a broadcast of
+            # the fresh labels ran the gather as a job of its own)
+            lab_of_lab = new_labels.select(
+                F.col(VID).alias("label"), F.col("label").alias("label2")
             )
             new_labels = (
-                labels.select(VID, F.col("label").alias("_old"))
-                .join(nbr_min.hint("shuffle_hash"), VID, "left")
+                new_labels.join(lab_of_lab.hint("shuffle_hash"), "label", "left")
                 .select(
                     VID,
-                    F.least(F.col("_old"), F.coalesce(F.col("nbr_label"), F.col("_old"))).alias("label"),
+                    F.coalesce(F.col("label2"), F.col("label")).alias("label"),
                     F.col("_old"),
                 )
             )
-            if shortcutting:
-                # pointer jumping: label ← label(label). label ids are vertex ids,
-                # so one self-join against the fresh labels collapses chains.
-                lab_of_lab = new_labels.select(
-                    F.col(VID).alias("label"), F.col("label").alias("label2")
-                )
-                new_labels = (
-                    new_labels.join(lab_of_lab, "label", "left")
-                    .select(
-                        VID,
-                        F.coalesce(F.col("label2"), F.col("label")).alias("label"),
-                        F.col("_old"),
-                    )
-                )
-            # changed-count rides the materialization job via observe — no
-            # separate comparison job per round
-            obs = Observation(f"wcc_iter_{it}")
-            new_labels = new_labels.observe(
-                obs,
-                F.sum(F.when(F.col("label") != F.col("_old"), 1).otherwise(0)).alias("changed"),
-            ).drop("_old")
-            new_labels = truncate_state(new_labels, n_part, VID)
-            changed = int(obs.get["changed"] or 0)
-            labels.unpersist()
-            labels = new_labels
-            if checkpointer is not None:
-                checkpointer.save(labels, it + 1, {"changed": changed})
-            if changed == 0:
-                break
+        return new_labels, [_changed_labels()]
 
+    labels, _ = superstep_loop(
+        graph.vertices().withColumn("label", F.col(VID)),
+        step,
+        lambda m: m["changed"] == 0,
+        lambda df: truncate_state(df, n_part, VID),
+        max_iter,
+        n_part,
+        checkpointer=checkpointer,
+    )
     if owned_edges:
         edges.unpersist()
-    out = labels.select(F.col(VID).alias("vertex"), F.col("label").alias("labels"))
+    return _labels_out(graph, labels, "labels", unrenumber)
+
+
+def _undirected_pairs(graph: LinkGraph) -> tuple:
+    """``(edges, owned)``: [src, dst] of the underlying undirected graph,
+    src-partitioned, and whether it is a new cached frame the caller
+    unpersists."""
+    edges = graph.edges.select(SRC, DST)
+    if not graph.properties.directed:
+        return edges, False
+    rev = graph.edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
+    edges = edges.union(rev).distinct().repartition(graph.num_partitions, SRC).persist()
+    edges.count()
+    return edges, True
+
+
+def _changed_labels():
+    """A label loop's convergence scalar: the labels a superstep changed."""
+    return F.sum(F.when(F.col("label") != F.col("_old"), 1).otherwise(0)).alias("changed")
+
+
+def _labels_out(graph: LinkGraph, labels: DataFrame, col: str, unrenumber: bool) -> DataFrame:
+    """DF[vertex, <col>] of a label state; unrenumbered, each label class is
+    renamed to its minimum EXTERNAL member, so the output is stable
+    regardless of the internal renumbering."""
+    out = labels.select(F.col(VID).alias("vertex"), F.col("label").alias(col))
     if unrenumber:
         out = graph.unrenumber(out, "vertex")
-        # canonicalize label to each component's minimum EXTERNAL id so the
-        # output is stable regardless of the internal renumbering
         if graph.renumber_map is not None:
-            comp_min = out.groupBy("labels").agg(F.min("vertex").alias("_canon"))
-            out = (
-                out.join(comp_min, "labels")
-                .select("vertex", F.col("_canon").alias("labels"))
-            )
+            canon = out.groupBy(col).agg(F.min("vertex").alias("_canon"))
+            out = out.join(canon, col).select("vertex", F.col("_canon").alias(col))
     return out

@@ -86,7 +86,12 @@ def _cleanup_staged_dirs() -> None:
 atexit.register(_cleanup_staged_dirs)
 
 
-def _track_staged(d: str) -> str:
+def _staged_dir(prefix: str, key: str) -> str:
+    """A staging dir in the tempdir, keyed by ``key`` and this process's
+    pid (one process's exit cleanup must not remove a dir another live
+    process is still reading), registered for removal at exit."""
+    tag = hashlib.sha1(key.encode()).hexdigest()[:12]
+    d = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}_{os.getpid()}")
     _STAGED_DIRS.add(d)
     return d
 
@@ -97,17 +102,14 @@ def _as_drop_dir(path: str) -> str:
     one-file drop dir.  Local-mode convenience only: a real deployment
     points at the drop directory itself.
 
-    The staging dir is DETERMINISTIC per input path (so repeated harness
-    invocations reuse it instead of leaking a fresh mkdtemp per call) and
-    holds a SYMLINK, not a copy (a large single-file input is never
+    The staging dir is DETERMINISTIC per input path and process (so
+    repeated calls reuse it instead of leaking a fresh mkdtemp per call)
+    and holds a SYMLINK, not a copy (a large single-file input is never
     duplicated).  Falls back to a copy only if the filesystem refuses
     symlinks."""
     local = path.removeprefix("file:")
     if os.path.isfile(local):
-        tag = hashlib.sha1(os.path.abspath(local).encode()).hexdigest()[:12]
-        d = _track_staged(
-            os.path.join(tempfile.gettempdir(), f"cgs_stream_src_{tag}")
-        )
+        d = _staged_dir("cgs_stream_src", os.path.abspath(local))
         os.makedirs(d, exist_ok=True)
         link = os.path.join(d, os.path.basename(local))
         if not os.path.exists(link):
@@ -335,10 +337,7 @@ def stage_chronological_drops(
 
     local = os.path.abspath(path.removeprefix("file:"))
     if out_dir is None:
-        tag = hashlib.sha1(f"{local}|{n_drops}".encode()).hexdigest()[:12]
-        out_dir = _track_staged(
-            os.path.join(tempfile.gettempdir(), f"cgs_multi_drop_{tag}")
-        )
+        out_dir = _staged_dir("cgs_multi_drop", f"{local}|{n_drops}")
     if os.path.isdir(out_dir):
         shutil.rmtree(out_dir)
     os.makedirs(out_dir)

@@ -6,7 +6,8 @@
   restated as POINTER DOUBLING: each round every vertex adds its current
   ancestor's accumulated cost and jumps to the ancestor's ancestor, so an
   L-deep tree finishes in ceil(log2 L) supersteps of one self-join each —
-  the same shape as the WCC pointer-jump loop, no per-path sequential work.
+  the same shape as the WCC pointer-jump loop, no per-path sequential work;
+  the loop is ``graph.superstep_loop``.
 - ``sample_groups`` — reference ``utilities/utils.py:488-512``: uniform
   n-per-group sampling; a per-group ``row_number`` over a seeded random
   order (groups sample in parallel; no global shuffle of the full frame).
@@ -16,10 +17,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .graph import truncate_state
+from .graph import superstep_loop, truncate_state
 
 _UNREACHED = 1.7976931348623157e308  # DBL_MAX, the reference's sentinel
 
@@ -78,40 +79,36 @@ def get_traversed_cost(
             .alias("cost"),
         )
     )
-    state = truncate_state(state)
-
     n = df.count()
     rounds = min(max_rounds, max(1, math.ceil(math.log2(max(2, n))) + 1))
-    for i in range(rounds):
+
+    def step(state: DataFrame, _report):
         b = state.select(
             F.col("vertex").alias("_av"),
             F.col("anc").alias("_aanc"),
             F.col("cost").alias("_acost"),
         )
-        # the pending count rides the materialization job via observe — no
-        # separate per-round aggregation job (same idiom as wcc.py)
-        obs = Observation(f"traversed_cost_{i}")
-        nxt = (
-            state.join(b, state["anc"] == b["_av"], "left")
-            .select(
-                "vertex",
-                F.when(F.col("anc") == -1, F.lit(-1))
-                .otherwise(F.coalesce(F.col("_aanc"), F.lit(-1)))
-                .alias("anc"),
-                F.when(F.col("anc") == -1, F.col("cost"))
-                .otherwise(F.col("cost") + F.coalesce(F.col("_acost"), F.lit(0.0)))
-                .alias("cost"),
-            )
-            .observe(
-                obs,
-                F.sum(F.when(F.col("anc") != -1, 1).otherwise(0)).alias("pending"),
-            )
+        nxt = state.join(b.hint("shuffle_hash"), state["anc"] == b["_av"], "left").select(
+            "vertex",
+            F.when(F.col("anc") == -1, F.lit(-1))
+            .otherwise(F.coalesce(F.col("_aanc"), F.lit(-1)))
+            .alias("anc"),
+            F.when(F.col("anc") == -1, F.col("cost"))
+            .otherwise(F.col("cost") + F.coalesce(F.col("_acost"), F.lit(0.0)))
+            .alias("cost"),
         )
-        old = state
-        state = truncate_state(nxt)
-        old.unpersist()
-        if not int(obs.get["pending"] or 0):
-            break
+        return nxt, [F.sum(F.when(F.col("anc") != -1, 1).otherwise(0)).alias("pending")]
+
+    # no graph to take a partition count from: the session's
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    state, _ = superstep_loop(
+        state,
+        step,
+        lambda m: m["pending"] == 0,
+        lambda s: truncate_state(s),
+        rounds,
+        n_part,
+    )
 
     return state.select("vertex", F.col("cost").alias("info"))
 

@@ -4,6 +4,7 @@ final ranks identical (SURVEY §5.2 item 5 / north rule resumability)."""
 import json
 import os
 
+import pytest
 from conftest import karate_edges, seeded_graph
 
 from cugraph_spark.checkpoint import CheckpointManager
@@ -73,4 +74,35 @@ def test_manifest_is_json_complete(spark, tmp_path):
     path = os.path.join(str(tmp_path), "pr", f"iter={it:05d}", "manifest.json")
     with open(path) as f:
         json.load(f)  # valid JSON, atomically replaced
+    g.unpersist()
+
+
+@pytest.mark.parametrize("op", ["wcc", "lpa"])
+def test_label_loop_resume_identical(spark, tmp_path, op):
+    """WCC and LPA stopped below their round count resume from the last
+    checkpoint and end where an uninterrupted run ends, at the same round.
+    A path graph with WCC's pointer jumping off moves the minimum label one
+    hop per round (karate converges in 3 rounds)."""
+    from cugraph_spark.operators.lpa import label_propagation
+
+    run = {
+        "wcc": lambda g, **kw: weakly_connected_components(g, shortcutting=False, **kw),
+        "lpa": label_propagation,
+    }[op]
+    path = [(i, i + 1) for i in range(11)]
+    g = LinkGraph.from_edges(
+        spark.createDataFrame(path, "src LONG, dst LONG"), directed=False, num_partitions=4
+    )
+
+    ck_full = CheckpointManager(str(tmp_path), f"{op}-full")
+    full = {tuple(r) for r in run(g, checkpointer=ck_full).collect()}
+    rounds = ck_full.completed_iterations()[-1]
+    assert rounds > 4, rounds
+
+    ck = CheckpointManager(str(tmp_path), op)
+    run(g, max_iter=3, checkpointer=ck)
+    assert ck.completed_iterations()[-1] == 3
+    resumed = {tuple(r) for r in run(g, checkpointer=ck).collect()}
+    assert resumed == full
+    assert ck.completed_iterations()[-1] == rounds
     g.unpersist()

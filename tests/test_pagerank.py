@@ -9,6 +9,7 @@ import pytest
 
 from conftest import karate_edges, pagerank_oracle, seeded_graph
 
+import cugraph_spark.graph as graph_mod
 from cugraph_spark.graph import LinkGraph
 from cugraph_spark.operators.pagerank import pagerank
 from cugraph_spark.operators.wcc import weakly_connected_components
@@ -141,7 +142,8 @@ def test_pagerank_fused_bit_identical(spark):
 
 # ------------------------------------------------------ superstep mechanics
 class _Truncations:
-    """Wraps ``truncate_state`` as one operator module calls it.  At each
+    """Wraps ``truncate_state`` as one module of ``cugraph_spark`` calls it
+    (``module`` is its name under the package).  At each
     return it records the Spark jobs run so far (counted in a job group of
     its own), the digit count of the returned state's sizeInBytes, its
     ``id`` column type and, with ``plans=True``, the executed plan of the
@@ -151,7 +153,7 @@ class _Truncations:
         sc = spark.sparkContext
         group = f"truncations-{module}"
         self.jobs, self.digits, self.id_types, self.plans = [], [], [], []
-        mod = importlib.import_module(f"cugraph_spark.operators.{module}")
+        mod = importlib.import_module(f"cugraph_spark.{module}")
         orig = mod.truncate_state
 
         def wrapped(df, num_partitions=None, *key_cols):
@@ -173,18 +175,34 @@ class _Truncations:
         self._sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-@pytest.mark.parametrize("renumber", [True, False])
-def test_pagerank_superstep_one_exchange_one_job(spark, karate_df, monkeypatch, renumber):
+@pytest.mark.parametrize(
+    "renumber,own_partitions",
+    [
+        pytest.param(True, False, id="True"),
+        pytest.param(False, False, id="False"),
+        pytest.param(True, True, id="num_partitions"),
+    ],
+)
+def test_pagerank_superstep_one_exchange_one_job(
+    spark, karate_df, monkeypatch, renumber, own_partitions
+):
     """A materialized superstep on an int-narrowed graph shuffles the
     E-row contributions once, on ``dst``, joins on no cast id key, and runs
     as exactly one Spark job — with AQE at the session default.  Raw ids
-    (renumber=False) that fit int are narrowed like dense ones."""
+    (renumber=False) that fit int are narrowed like dense ones.  A graph
+    built with a partition count other than the session's gets the same
+    plan: the loop shuffles into the graph's count, and the session's
+    count is back afterwards."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    # default partitioning: the graph takes the session's shuffle partitions,
-    # so the groupBy(dst) lands on the same hash(id) layout as the state
-    g = LinkGraph.from_edges(karate_df, directed=True, renumber=renumber)
+    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    # the loop pins the shuffle count to the graph's partitions, so the
+    # groupBy(dst) lands on the same hash(id) layout as the state
+    parts = int(session_parts) + 3 if own_partitions else None
+    g = LinkGraph.from_edges(
+        karate_df, directed=True, renumber=renumber, num_partitions=parts
+    )
     n = g.num_partitions
-    rec = _Truncations(monkeypatch, spark, "pagerank", plans=True)
+    rec = _Truncations(monkeypatch, spark, "operators.pagerank", plans=True)
     try:
         res = pagerank(g, tol=0.0, max_iter=4, fail_on_nonconvergence=False)
     finally:
@@ -199,6 +217,8 @@ def test_pagerank_superstep_one_exchange_one_job(spark, karate_df, monkeypatch, 
         assert len(exchanges) == 1, exchanges
         assert re.search(rf"Exchange hashpartitioning\(dst#\d+, {n}\)", exchanges[0]), exchanges
         assert "cast(id" not in plan, plan
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_parts
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     g.unpersist()
 
 
@@ -209,7 +229,7 @@ def test_truncate_state_stats_stay_exact(spark, karate_df, monkeypatch):
     iteration until Catalyst's BigInteger overflowed)."""
     n = 120
     g = LinkGraph.from_edges(karate_df, directed=True, num_partitions=8)
-    rec = _Truncations(monkeypatch, spark, "pagerank")
+    rec = _Truncations(monkeypatch, spark, "operators.pagerank")
     try:
         res = pagerank(g, tol=0.0, max_iter=n, fail_on_nonconvergence=False)
     finally:
@@ -224,7 +244,7 @@ def test_truncate_state_stats_stay_exact(spark, karate_df, monkeypatch):
     # rounds, +1 to see none change
     path = spark.createDataFrame([(i, i + 1) for i in range(n + 1)], "src LONG, dst LONG")
     gp = LinkGraph.from_edges(path, directed=False, num_partitions=8)
-    rec = _Truncations(monkeypatch, spark, "wcc")
+    rec = _Truncations(monkeypatch, spark, "operators.wcc")
     try:
         out = weakly_connected_components(gp, max_iter=n + 5, shortcutting=False)
     finally:
@@ -233,3 +253,87 @@ def test_truncate_state_stats_stay_exact(spark, karate_df, monkeypatch):
     assert len(rec.digits) == 1 + n + 1  # initial labels + rounds
     assert rec.digits[-1] == rec.digits[1], rec.digits
     gp.unpersist()
+
+
+def _run_loop(karate_df, loop: str) -> None:
+    """One run of the fixed-point loop of ``loop`` on karate."""
+    if loop == "operators.wcc":
+        weakly_connected_components(LinkGraph.from_edges(karate_df, directed=False))
+    elif loop == "operators.lpa":
+        from cugraph_spark.operators.lpa import label_propagation
+
+        label_propagation(LinkGraph.from_edges(karate_df, directed=False))
+    elif loop == "operators.centrality":
+        from cugraph_spark.operators.centrality import katz_centrality
+
+        katz_centrality(LinkGraph.from_edges(karate_df, directed=True), max_iter=4, tol=0.0)
+    elif loop == "csr":
+        from cugraph_spark.csr import pagerank_csr
+
+        pagerank_csr(LinkGraph.from_edges(karate_df, directed=True), max_iter=4, tol=0.0)
+    else:
+        from cugraph_spark.operators.traversal import bfs
+        from cugraph_spark.utilities import get_traversed_cost
+
+        w = karate_df.withColumn("w", (karate_df["src"] + karate_df["dst"]).cast("double"))
+        g = LinkGraph.from_edges(w, weight="w", directed=False, renumber=False)
+        tree = bfs(g, 0).persist()
+        tree.count()
+        get_traversed_cost(tree, 0, g.edges)
+
+
+@pytest.mark.parametrize(
+    "loop",
+    [
+        "operators.wcc",
+        "operators.lpa",
+        "operators.centrality",
+        "csr",
+        "utilities",
+    ],
+)
+def test_superstep_loop_one_job_per_superstep(spark, karate_df, monkeypatch, loop):
+    """Every loop on ``graph.superstep_loop`` runs each superstep as exactly
+    one Spark job — the materialization, with the convergence scalars
+    folded into it — with AQE at the session default.  Counted between
+    consecutive returns of ``truncate_state`` as the loop's own module
+    calls it: the initial state, then one per superstep.  PageRank's loop
+    is pinned, with its plans, by the test above."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    seen = []
+    real_loop = graph_mod.superstep_loop
+
+    def counting_loop(*args, **kwargs):
+        seen.append(len(rec.jobs))
+        out = real_loop(*args, **kwargs)
+        seen.append(out[1].iterations)
+        return out
+
+    mod = importlib.import_module(f"cugraph_spark.{loop}")
+    monkeypatch.setattr(mod, "superstep_loop", counting_loop)
+    rec = _Truncations(monkeypatch, spark, loop)
+    try:
+        _run_loop(karate_df, loop)
+    finally:
+        rec.close()
+    before, steps = seen
+    assert steps >= 2, steps
+    supersteps = rec.jobs[before:]
+    assert len(supersteps) == steps + 1, (rec.jobs, seen)
+    assert [b - a for a, b in zip(supersteps, supersteps[1:])] == [1] * steps, supersteps
+
+
+def test_pagerank_no_superstep_raises(spark, karate_df, tmp_path):
+    """max_iter=0, or a resume from a checkpoint at or past max_iter, runs
+    no superstep; without convergence that is the documented RuntimeError."""
+    from cugraph_spark.checkpoint import CheckpointManager
+
+    g = LinkGraph.from_edges(karate_df, directed=True, num_partitions=4)
+    with pytest.raises(RuntimeError):
+        pagerank(g, tol=1e-8, max_iter=0)
+    ck = CheckpointManager(str(tmp_path), "pr")
+    pagerank(g, tol=1e-8, max_iter=3, checkpointer=ck, fail_on_nonconvergence=False)
+    for max_iter in (3, 2):
+        with pytest.raises(RuntimeError):
+            pagerank(g, tol=1e-8, max_iter=max_iter, checkpointer=ck)
+    g.unpersist()

@@ -195,3 +195,23 @@ def test_staged_drop_dirs_cleaned_at_exit(spark):
     st._cleanup_staged_dirs()
     assert not os.path.exists(d1) and not os.path.exists(m1)
     assert not st._STAGED_DIRS
+
+
+def test_staged_drop_dirs_of_other_processes_survive_cleanup(spark):
+    """Staged dirs carry the staging process's pid: the exit cleanup of one
+    process removes its own dirs, never the same input's dir of another
+    live process that may still be streaming from it."""
+    import tempfile
+
+    src = f"{SF_DIR}/events.parquet"
+    mine = st._as_drop_dir(src)
+    assert mine.endswith(f"_{os.getpid()}")
+    other = mine[: -len(str(os.getpid()))] + str(os.getpid() + 1)
+    assert os.path.dirname(other) == tempfile.gettempdir()
+    os.makedirs(other)
+    try:
+        st._cleanup_staged_dirs()
+        assert not os.path.exists(mine)
+        assert os.path.isdir(other)
+    finally:
+        shutil.rmtree(other, ignore_errors=True)
