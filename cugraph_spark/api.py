@@ -15,12 +15,13 @@ asserts the export list against the reference file verbatim.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import DST, SRC, WGT, GraphProperties, LinkGraph
 from .graph_classes import BiPartiteGraph, NPartiteGraph, Tree
 from .property_graph import PropertyGraph, hypergraph
+from .session import get_spark
 
 # ---- direct re-exports (reference name == our name) ------------------------
 from .operators.pagerank import pagerank as _pagerank_result
@@ -106,15 +107,6 @@ strong_connected_component = strongly_connected_components
 # link prediction nx-compat wrappers are defined below.
 
 
-def _spark(spark: SparkSession | None = None) -> SparkSession:
-    s = spark or SparkSession.getActiveSession()
-    if s is None:
-        from .session import get_spark
-
-        s = get_spark()
-    return s
-
-
 # ---------------------------------------------------------------- Graph shim
 class EdgelistRequiredError(RuntimeError, AttributeError):
     """Attribute access on a Graph with no edge list yet.
@@ -175,7 +167,7 @@ class Graph:
         renumber: bool = True,
     ) -> "Graph":
         return self.from_cudf_edgelist(
-            _spark().createDataFrame(pdf),
+            get_spark().createDataFrame(pdf),
             source=source,
             destination=destination,
             edge_attr=edge_attr,
@@ -203,13 +195,13 @@ class Graph:
 
     def from_pandas_adjacency(self, pdf) -> "Graph":
         self._g = LinkGraph.from_pandas_adjacency(
-            _spark(), pdf, directed=self.directed
+            get_spark(), pdf, directed=self.directed
         )
         return self
 
     def from_numpy_array(self, np_array, nodes=None) -> "Graph":
         self._g = LinkGraph.from_numpy_array(
-            _spark(), np_array, directed=self.directed
+            get_spark(), np_array, directed=self.directed
         )
         if nodes is not None:
             self._g.add_nodes_from(nodes)
@@ -303,7 +295,7 @@ def from_edgelist(
     if isinstance(df, DataFrame):
         sdf = df
     else:
-        sdf = _spark().createDataFrame(df)
+        sdf = get_spark().createDataFrame(df)
     directed, multi = _create_flags(create_using)
     return LinkGraph.from_edges(
         sdf,
@@ -346,7 +338,7 @@ def from_pandas_edgelist(
 ):
     directed, multi = _create_flags(create_using)
     g = LinkGraph.from_pandas_edgelist(
-        _spark(), df, src=source, dst=destination, weight=edge_attr,
+        get_spark(), df, src=source, dst=destination, weight=edge_attr,
         directed=directed, renumber=renumber,
     )
     return g
@@ -359,7 +351,7 @@ def to_pandas_edgelist(G, source: str = "src", destination: str = "dst"):
 
 def from_pandas_adjacency(df, create_using=None):
     directed, _ = _create_flags(create_using)
-    return LinkGraph.from_pandas_adjacency(_spark(), df, directed=directed)
+    return LinkGraph.from_pandas_adjacency(get_spark(), df, directed=directed)
 
 
 def to_pandas_adjacency(G):
@@ -368,7 +360,7 @@ def to_pandas_adjacency(G):
 
 def from_numpy_array(A, create_using=None):
     directed, _ = _create_flags(create_using)
-    return LinkGraph.from_numpy_array(_spark(), A, directed=directed)
+    return LinkGraph.from_numpy_array(get_spark(), A, directed=directed)
 
 
 def to_numpy_array(G):
@@ -400,7 +392,7 @@ def from_adjlist(offsets, indices, values=None, create_using=None):
             rows.append(
                 (v, int(idx[p]), float(vals[p]) if vals is not None else 1.0)
             )
-    sdf = _spark().createDataFrame(rows, "src LONG, dst LONG, weight DOUBLE")
+    sdf = get_spark().createDataFrame(rows, "src LONG, dst LONG, weight DOUBLE")
     directed, multi = _create_flags(create_using)
     return LinkGraph.from_edges(
         sdf,
@@ -550,7 +542,7 @@ def _ebunch_frame(ebunch) -> DataFrame | None:
     if isinstance(ebunch, DataFrame):
         return ebunch
     rows = [(int(a), int(b)) for a, b in ebunch]
-    return _spark().createDataFrame(rows, "first LONG, second LONG")
+    return get_spark().createDataFrame(rows, "first LONG, second LONG")
 
 
 def _nx_coefficient(fn, coeff: str, G, ebunch):

@@ -23,16 +23,9 @@ the reference accepts cugraph.Graph.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-
-def _spark() -> SparkSession:
-    s = SparkSession.getActiveSession()
-    if s is None:
-        from .session import get_spark
-
-        s = get_spark()
-    return s
+from .session import get_spark
 
 
 def _karate_one_direction() -> list[tuple[int, int, float]]:
@@ -83,7 +76,7 @@ class Dataset:
                 f"({', '.join(sorted(_GENERATED))}) can be materialized"
             )
         if self._edgelist is None:
-            self._edgelist = _spark().createDataFrame(
+            self._edgelist = get_spark().createDataFrame(
                 self._rows_fn(), "src LONG, dst LONG, wgt DOUBLE"
             ).persist()
         return self._edgelist

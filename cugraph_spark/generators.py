@@ -14,19 +14,11 @@ same weighted/typed edge list on any cluster layout.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .datagen import RMAT_A, RMAT_B, RMAT_C, rmat_edges
-
-
-def _spark() -> SparkSession:
-    s = SparkSession.getActiveSession()
-    if s is None:
-        from .session import get_spark
-
-        s = get_spark()
-    return s
+from .session import get_spark
 
 
 def _hash_frac(col, seed: int, salt: int):
@@ -71,7 +63,7 @@ def rmat(
             "None if 'include_edge_types' is true"
         )
     e = rmat_edges(
-        _spark(),
+        get_spark(),
         int(scale),
         int(num_edges),
         a=a,

@@ -12,19 +12,25 @@ Reference parity:
   iteration with L2 normalization.
 
 The three iterative ones are the same superstep shape as PageRank (SURVEY
-§2.1): the persisted src-partitioned edge table joins the V-row state,
-groupBy-sum gathers, scalar aggs fold; ``truncate_state`` per iteration
-cuts lineage.  Katz runs on ``graph.superstep_loop``; HITS and eigenvector
-normalize the state after each materialization, so they keep their own
-loops.
+§2.1) and run on ``graph.superstep_loop``: the persisted src-partitioned
+edge table joins the V-row state, groupBy-sum gathers, and the scalars
+fold into the materialization via ``observe`` — one Spark job per
+superstep.  HITS and eigenvector normalize lazily: the state stores the
+raw gather, and the next step divides by the norm the last one observed.
+Their L1 delta compares two normalized vectors, so it needs the new norm
+and cannot fold into the job that observes it; instead the state carries
+the previous normalized vector and step j+1 observes step j's delta.  On
+convergence the loop returns that carried vector, the iterate whose delta
+passed, at the cost of one extra gather per converged call.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, VID, WGT, LinkGraph, superstep_loop, truncate_state
+from .pagerank import _renumber_values
 
 
 def degree_centrality(graph: LinkGraph, normalized: bool = True) -> DataFrame:
@@ -46,95 +52,85 @@ def hits(
     normalized: bool = True,
     unrenumber: bool = True,
 ) -> DataFrame:
-    """DF[vertex, hubs, authorities] — alternating gathers, L1 normalize
+    """DF[vertex, hubs, authorities] — alternating gathers, max-normalize
     each half-step (hits_impl.cuh:41-93), converge on Σ|hub−hub_old|.
 
     ``nstart`` (``link_analysis/hits.py:49-56``): DF[vertex, values] of
     initial hub guesses in EXTERNAL ids; vertices absent from nstart keep
     the uniform 1/V start.  HITS is a power iteration on AᵀA, so any
     non-degenerate start converges to the same fixpoint — nstart shifts
-    the iteration count, not the answer."""
+    the iteration count, not the answer.
+
+    The state holds the raw gathers and the previous normalized vectors;
+    a step normalizes the raw gathers by the maxima the last step
+    observed, so its delta is the previous iterate's (see module
+    docstring)."""
     n_part = graph.num_partitions
     V = graph.number_of_vertices()
     edges = graph.edges.select(SRC, DST)
 
     state = graph.vertices().select(
-        VID, F.lit(1.0 / V).alias("hub"), F.lit(1.0 / V).alias("auth")
+        VID, F.lit(1.0 / V).alias("hub_raw"), F.lit(1.0 / V).alias("auth_raw")
     )
     if nstart is not None:
-        g0 = nstart.select(
-            F.col("vertex").alias("_ext"), F.col("values").cast("double").alias("_h0")
+        h0 = _renumber_values(graph, nstart, "_h0")
+        state = state.join(h0, VID, "left").select(
+            VID, F.coalesce("_h0", "hub_raw").alias("hub_raw"), "auth_raw"
         )
-        if graph.renumber_map is not None:
-            from ..graph import EXT
 
-            g0 = g0.join(
-                graph.renumber_map.withColumnRenamed(EXT, "_ext"), "_ext"
-            ).select(VID, "_h0")
-        else:
-            g0 = g0.select(F.col("_ext").alias(VID), "_h0")
-        state = (
-            state.join(g0, VID, "left")
-            .select(VID, F.coalesce("_h0", "hub").alias("hub"), "auth")
+    def scaled(report) -> tuple:
+        """(hub, auth) of the state's raw gathers, max-normalized by the
+        step that gathered them (hits_impl.cuh:144-156); the start is used
+        as it is."""
+        m = report.metrics[-1] if report.metrics else {}
+        return (
+            F.col("hub_raw") / F.lit(float(m.get("h_max", 1.0)) or 1.0),
+            F.col("auth_raw") / F.lit(float(m.get("a_max", 1.0)) or 1.0),
         )
-    state = cached = truncate_state(state, n_part, VID)
 
-    for it in range(max_iter):
-        # ONE materialization per iteration: the raw auth gather, the raw
-        # hub gather chained over it, and the previous hub value all land in
-        # one [id, hub_raw, auth_raw, _old] frame whose max-scalars ride the
-        # same job via observe (the old loop recomputed the E-row gather
-        # three times per iteration for h_max/a_max/delta — VERDICT r01 #5)
+    def step(state: DataFrame, report):
+        hub, auth = scaled(report)
+        # this step's input is the next state's previous iterate; `_old`,
+        # the one before it, feeds the delta (the first step has none)
+        old = [F.col("hub_prev").alias("_old")] if report.metrics else []
+        cur = state.select(VID, hub.alias("hub_prev"), auth.alias("auth_prev"), *old)
         # authorities ← Σ prev hubs over in-edges (hits_impl.cuh:118-127)
         auth_new = (
-            edges.join(state.select(F.col(VID).alias(SRC), "hub"), SRC)
+            edges.join(
+                cur.select(F.col(VID).alias(SRC), "hub_prev").hint("shuffle_hash"), SRC
+            )
             .groupBy(F.col(DST).alias(VID))
-            .agg(F.sum("hub").alias("auth_raw"))
+            .agg(F.sum("hub_prev").alias("auth_raw"))
         )
-        a = (
-            state.select(VID, F.col("hub").alias("_old"))
-            .join(auth_new.hint("shuffle_hash"), VID, "left")
-            .fillna(0.0, ["auth_raw"])
-        )
+        a = cur.join(auth_new.hint("shuffle_hash"), VID, "left").fillna(0.0, ["auth_raw"])
         # hubs ← Σ UNnormalized authorities over out-edges (the reference
         # scatters `authorities` to edges before normalizing, :128-142)
         hub_new = (
-            edges.join(a.select(F.col(VID).alias(DST), "auth_raw"), DST)
+            edges.join(
+                a.select(F.col(VID).alias(DST), "auth_raw").hint("shuffle_hash"), DST
+            )
             .groupBy(F.col(SRC).alias(VID))
             .agg(F.sum("auth_raw").alias("hub_raw"))
         )
-        obs = Observation(f"hits_iter_{it}")
-        raw = (
-            a.join(hub_new.hint("shuffle_hash"), VID, "left")
-            .fillna(0.0, ["hub_raw"])
-            .observe(
-                obs,
-                F.max("hub_raw").alias("h_max"),
-                F.max("auth_raw").alias("a_max"),
-            )
-        )
-        raw = truncate_state(raw, n_part, VID)
-        m = obs.get
-        h_max = float(m["h_max"] or 1.0) or 1.0
-        a_max = float(m["a_max"] or 1.0) or 1.0
-        # max-normalize both (hits_impl.cuh:144-156, reduce_op::maximum) —
-        # a cheap map over the cached frame, no second E-row pass
-        new_state = raw.select(
-            VID,
-            (F.col("hub_raw") / F.lit(h_max)).alias("hub"),
-            (F.col("auth_raw") / F.lit(a_max)).alias("auth"),
-            "_old",
-        )
-        delta = (
-            new_state.agg(F.sum(F.abs(F.col("hub") - F.col("_old")))).collect()[0][0]
-            or 0.0
-        )
-        cached.unpersist()
-        cached = raw  # the persisted handle backing the derived state
-        state = new_state.drop("_old")
-        if delta < tol:
-            break
+        plan = a.join(hub_new.hint("shuffle_hash"), VID, "left").fillna(0.0, ["hub_raw"])
+        aggs = [F.max("hub_raw").alias("h_max"), F.max("auth_raw").alias("a_max")]
+        if old:
+            aggs.append(F.sum(F.abs(F.col("hub_prev") - F.col("_old"))).alias("delta"))
+        return plan, aggs
 
+    state, report = superstep_loop(
+        state,
+        step,
+        lambda m: "delta" in m and m["delta"] < tol,
+        lambda df: truncate_state(df, n_part, VID),
+        max_iter,
+        n_part,
+    )
+    # converged: the carried iterate is the one whose delta passed
+    hub, auth = (
+        (F.col("hub_prev"), F.col("auth_prev")) if report.converged else scaled(report)
+    )
+    state = state.select(VID, hub.alias("hub"), auth.alias("auth"))
     if normalized:
         hs = state.agg(F.sum("hub"), F.sum("auth")).collect()[0]
         h_tot, a_tot = float(hs[0] or 1.0), float(hs[1] or 1.0)
@@ -218,48 +214,45 @@ def eigenvector_centrality(
     unrenumber: bool = True,
 ) -> DataFrame:
     """DF[vertex, eigenvector_centrality] — power iteration on Aᵀ with L2
-    normalization per step (eigenvector_centrality.py:26-112)."""
+    normalization per step (eigenvector_centrality.py:26-112).  The state
+    holds the raw gather and the previous normalized vector, as in
+    :func:`hits`."""
     n_part = graph.num_partitions
     V = graph.number_of_vertices()
     edges = graph.edges.select(SRC, DST, WGT)
 
-    x = cached = truncate_state(
-        graph.vertices().select(VID, F.lit(1.0 / V).alias("x")), n_part, VID
-    )
+    def scaled(report):
+        """The state's raw gather, L2-normalized by the step that gathered
+        it; the start is used as it is."""
+        m = report.metrics[-1] if report.metrics else {}
+        return F.col("g") / F.lit(float(m.get("l2", 1.0)) or 1.0)
 
-    for it in range(max_iter):
+    def step(state: DataFrame, report):
+        old = [F.col("x_prev").alias("_old")] if report.metrics else []
+        cur = state.select(VID, scaled(report).alias("x_prev"), *old)
         gathered = (
-            edges.join(x.select(F.col(VID).alias(SRC), "x"), SRC)
+            edges.join(
+                cur.select(F.col(VID).alias(SRC), "x_prev").hint("shuffle_hash"), SRC
+            )
             .groupBy(F.col(DST).alias(VID))
-            .agg(F.sum(F.col("x") * F.col(WGT)).alias("g"))
+            .agg(F.sum(F.col("x_prev") * F.col(WGT)).alias("g"))
         )
-        # materialize the RAW gather once, folding the L2 norm into the same
-        # job via observe; the normalized state is then a scalar-divide map
-        # over the cached frame (the old loop ran the full E-row gather
-        # twice per iteration — once for l2, once to materialize —
-        # VERDICT r01 #5), and the convergence delta is a V-row cached scan
-        obs = Observation(f"eig_iter_{it}")
-        raw = truncate_state(
-            x.select(VID, F.col("x").alias("_old"))
-            .join(gathered.hint("shuffle_hash"), VID, "left")
-            .fillna(0.0, ["g"])
-            .observe(obs, F.sqrt(F.sum(F.col("g") * F.col("g"))).alias("l2")),
-            n_part,
-            VID,
-        )
-        l2 = float(obs.get["l2"] or 1.0) or 1.0
-        new_x = raw.select(VID, (F.col("g") / F.lit(l2)).alias("x"), "_old")
-        delta = (
-            new_x.agg(F.sum(F.abs(F.col("x") - F.col("_old")))).collect()[0][0]
-            or 0.0
-        )
-        cached.unpersist()
-        cached = raw
-        x = new_x.drop("_old")
-        if delta < tol * V:
-            break
+        plan = cur.join(gathered.hint("shuffle_hash"), VID, "left").fillna(0.0, ["g"])
+        aggs = [F.sqrt(F.sum(F.col("g") * F.col("g"))).alias("l2")]
+        if old:
+            aggs.append(F.sum(F.abs(F.col("x_prev") - F.col("_old"))).alias("delta"))
+        return plan, aggs
 
-    out = x.select(F.col(VID).alias("vertex"), F.col("x").alias("eigenvector_centrality"))
+    state, report = superstep_loop(
+        graph.vertices().select(VID, F.lit(1.0 / V).alias("g")),
+        step,
+        lambda m: "delta" in m and m["delta"] < tol * V,
+        lambda df: truncate_state(df, n_part, VID),
+        max_iter,
+        n_part,
+    )
+    x = F.col("x_prev") if report.converged else scaled(report)
+    out = state.select(F.col(VID).alias("vertex"), x.alias("eigenvector_centrality"))
     if unrenumber:
         out = graph.unrenumber(out, "vertex")
     return out

@@ -136,7 +136,12 @@ def _modularity(orig: DataFrame, m_orig: DataFrame, resolution: float) -> float:
     (each direction credits its source endpoint, loops credit 2w — exactly
     k_v summed over the community), and  in_c = Σ w  where ci == cj.  One
     groupBy + one scalar agg replaces the previous four sequential
-    collect()s (deg-sum, in_both, in_loops, Σsig²)."""
+    collect()s (deg-sum, in_both, in_loops, Σsig²).
+
+    Precondition: ``m_orig`` assigns every vertex of ``orig``.  The inner
+    joins drop an edge with an unassigned endpoint from every sum, 2m
+    included, so a partial assignment scores a smaller graph without any
+    error.  The Louvain and Leiden levels always pass a full assignment."""
     cv = m_orig.withColumnRenamed("v", "i").withColumnRenamed("c", "ci")
     cv2 = m_orig.withColumnRenamed("v", "j").withColumnRenamed("c", "cj")
     loops = orig.filter(F.col("a") == F.col("b"))

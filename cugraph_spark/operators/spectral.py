@@ -19,12 +19,14 @@ one-shuffle-per-superstep SpMV gather:
   ``W·x`` plus the scalar ``dᵀx`` — the rank-one term never
   materializes.
 
-Per iteration: ONE real shuffle (the edges ⋈ state gather, k summed
-columns in a single aggregation), then a k×k Gram matrix collected to
-the driver (one cache-scan job) where the new orthonormal basis
-coefficients are solved (Cholesky — k ≤ num_clusters, trivially
-driver-sized) and applied as a lazy linear combination.  The trivial
-constant eigenvector is deflated by mean-centering every column.
+Per iteration ONE Spark job, on ``graph.superstep_loop``: the edges ⋈
+state gather (k summed columns in a single aggregation) is materialized
+with its count, column sums and k×k Gram matrix (and, for modularity,
+Σd·z) folded in via ``observe``.  The state keeps the raw product z; the
+next step solves the orthonormal basis coefficients driver-side (Cholesky
+— k ≤ num_clusters, trivially driver-sized) and applies them as a lazy
+linear combination, and maps ``dᵀx`` through the same coefficients.  The
+trivial constant eigenvector is deflated by mean-centering every column.
 k-means runs over the V×k embedding with the centroid table collected
 driver-side per round (num_clusters × k scalars — broadcast-sized by
 construction), assignment as a codegen'd argmin expression: no UDFs,
@@ -52,7 +54,7 @@ from ..graph import (
     VID,
     WGT,
     LinkGraph,
-    static_plan,
+    superstep_loop,
     truncate_state,
 )
 
@@ -93,101 +95,109 @@ def _spectral_embedding(
 ) -> tuple[DataFrame, list[str]]:
     """DF[id, x0..x{k-1}] — orthonormal k-dim spectral embedding."""
     n_part = graph.num_partitions
-    spark = graph.spark
     xcols = [f"x{j}" for j in range(k)]
 
     both = _sym_weighted(graph).repartition(n_part, SRC).persist()
     both.count()
     deg = both.groupBy(F.col(SRC).alias(VID)).agg(F.sum("w").alias("d"))
     base = graph.vertices().join(deg, VID, "left").select(
-        VID, F.coalesce(F.col("d"), F.lit(0.0)).alias("d")
-    )
-    row = base.agg(F.max("d"), F.sum("d")).collect()[0]
-    d_max = float(row[0] or 1.0)
-    two_m = float(row[1] or 1.0)
-    sigma = (2.0 * d_max + 1.0) if variant == "balanced" else (d_max + 1.0)
-
-    state = truncate_state(
-        base.select(VID, "d", *[_hash_unit(F.col(VID), j).alias(c) for j, c in enumerate(xcols)]),
-        n_part,
         VID,
+        F.coalesce(F.col("d"), F.lit(0.0)).alias("d"),
+        *[_hash_unit(F.col(VID), j).alias(c) for j, c in enumerate(xcols)],
     )
-    prev_ev = None
-    with static_plan(spark, n_part):
-        for _ in range(max_iter):
-            if variant == "modularity":
-                s_row = state.agg(
-                    *[F.sum(F.col("d") * F.col(c)) for c in xcols]
-                ).collect()[0]
-                s = [float(v or 0.0) for v in s_row]
-            gathered = (
-                both.join(
-                    state.select(F.col(VID).alias(SRC), *xcols).hint("shuffle_hash"),
-                    SRC,
-                )
-                .groupBy(F.col(DST).alias(VID))
-                .agg(*[F.sum(F.col(c) * F.col("w")).alias("g" + c) for c in xcols])
-            )
-            if variant == "balanced":
-                # M x = (σ − d)·x + W x
-                zs = [
-                    (
-                        (F.lit(sigma) - F.col("d")) * F.col(c)
-                        + F.coalesce(F.col("g" + c), F.lit(0.0))
-                    ).alias(c)
-                    for c in xcols
-                ]
-            else:
-                # M x = σ·x + W x − d·(dᵀx)/2m
-                zs = [
-                    (
-                        F.lit(sigma) * F.col(c)
-                        + F.coalesce(F.col("g" + c), F.lit(0.0))
-                        - F.col("d") * F.lit(s[j] / two_m)
-                    ).alias(c)
-                    for j, c in enumerate(xcols)
-                ]
-            new = truncate_state(
-                state.join(gathered, VID, "left").select(VID, "d", *zs), n_part, VID
-            )
-            state.unpersist()
-            # Gram + sums in one cache-scan job; basis solve driver-side
-            aggs = [F.count("*")] + [F.sum(c) for c in xcols]
-            for i in range(k):
-                for j in range(i, k):
-                    aggs.append(F.sum(F.col(xcols[i]) * F.col(xcols[j])))
-            stat = new.agg(*aggs).collect()[0]
-            n = float(stat[0])
-            mu = np.array([float(v or 0.0) for v in stat[1 : 1 + k]]) / n
-            G = np.zeros((k, k))
-            pos = 1 + k
-            for i in range(k):
-                for j in range(i, k):
-                    G[i, j] = G[j, i] = float(stat[pos] or 0.0)
-                    pos += 1
-            Gc = G - n * np.outer(mu, mu)  # deflate the constant eigenvector
-            ev = np.sqrt(np.maximum(np.diag(Gc), 0.0) / n)
-            ridge = 1e-12 * max(np.trace(Gc), 1.0)
-            R = np.linalg.cholesky(Gc + ridge * np.eye(k)).T  # Gc = RᵀR
-            C = np.linalg.inv(R) * np.sqrt(n)  # columns → unit RMS norm
-            state = new.select(
-                VID,
-                "d",
-                *[
-                    sum(
-                        ((F.col(xcols[i]) - F.lit(mu[i])) * F.lit(C[i, j]))
-                        for i in range(k)
-                    ).alias(xcols[j])
-                    for j in range(k)
-                ],
-            )
-            if prev_ev is not None and np.all(
-                np.abs(ev - prev_ev) <= tol * np.maximum(ev, 1.0)
-            ):
-                break
-            prev_ev = ev
+    # d_max, Σd and the start's dᵀx in one job
+    row = base.agg(
+        F.max("d"), F.sum("d"), *[F.sum(F.col("d") * F.col(c)) for c in xcols]
+    ).collect()[0]
+    d_max = float(row[0] or 1.0)
+    d_sum = float(row[1] or 0.0)
+    two_m = d_sum or 1.0
+    sigma = (2.0 * d_max + 1.0) if variant == "balanced" else (d_max + 1.0)
+    dx0 = np.array([float(v or 0.0) for v in row[2:]])
+
+    def basis(m: dict) -> tuple:
+        """(mu, C, ev) from a step's count, column sums and Gram matrix: the
+        state's raw columns z map to the orthonormal basis x = (z − mu)·C."""
+        n = float(m["n"])
+        mu = np.array([float(m[f"s{i}"]) for i in range(k)]) / n
+        G = np.array(
+            [[float(m[f"g{min(i, j)}_{max(i, j)}"]) for j in range(k)] for i in range(k)]
+        )
+        Gc = G - n * np.outer(mu, mu)  # deflate the constant eigenvector
+        ev = np.sqrt(np.maximum(np.diag(Gc), 0.0) / n)
+        ridge = 1e-12 * max(np.trace(Gc), 1.0)
+        R = np.linalg.cholesky(Gc + ridge * np.eye(k)).T  # Gc = RᵀR
+        C = np.linalg.inv(R) * np.sqrt(n)  # columns → unit RMS norm
+        return mu, C, ev
+
+    def current(state: DataFrame, report) -> tuple:
+        """(DF[id, d, x...], dᵀx): the state's raw columns mapped onto the
+        basis solved from the last step's scalars (the start is used as
+        it is); dᵀx maps through the same (mu, C) from Σd·z and Σd."""
+        if not report.metrics:
+            return state, dx0
+        m = report.metrics[-1]
+        mu, C, _ = basis(m)
+        dz = np.array([float(m.get(f"dz{i}", 0.0)) for i in range(k)])
+        x = [
+            sum(((F.col(xcols[i]) - F.lit(mu[i])) * F.lit(C[i, j])) for i in range(k))
+            for j in range(k)
+        ]
+        cur = state.select(VID, "d", *[e.alias(c) for e, c in zip(x, xcols)])
+        return cur, C.T @ (dz - mu * d_sum)
+
+    def step(state: DataFrame, report):
+        cur, dx = current(state, report)
+        gathered = (
+            both.join(cur.select(F.col(VID).alias(SRC), *xcols).hint("shuffle_hash"), SRC)
+            .groupBy(F.col(DST).alias(VID))
+            .agg(*[F.sum(F.col(c) * F.col("w")).alias("g" + c) for c in xcols])
+        )
+        if variant == "balanced":
+            # M x = (σ − d)·x + W x
+            zs = [
+                (
+                    (F.lit(sigma) - F.col("d")) * F.col(c)
+                    + F.coalesce(F.col("g" + c), F.lit(0.0))
+                ).alias(c)
+                for c in xcols
+            ]
+        else:
+            # M x = σ·x + W x − d·(dᵀx)/2m
+            zs = [
+                (
+                    F.lit(sigma) * F.col(c)
+                    + F.coalesce(F.col("g" + c), F.lit(0.0))
+                    - F.col("d") * F.lit(dx[j] / two_m)
+                ).alias(c)
+                for j, c in enumerate(xcols)
+            ]
+        plan = cur.join(gathered.hint("shuffle_hash"), VID, "left").select(VID, "d", *zs)
+        # count, sums and Gram (+ Σd·z) fold into the materialization; the
+        # next step solves the basis from them driver-side
+        aggs = [F.count("*").alias("n")] + [F.sum(c).alias(f"s{i}") for i, c in enumerate(xcols)]
+        aggs += [
+            F.sum(F.col(xcols[i]) * F.col(xcols[j])).alias(f"g{i}_{j}")
+            for i in range(k)
+            for j in range(i, k)
+        ]
+        if variant == "modularity":
+            aggs += [F.sum(F.col("d") * F.col(c)).alias(f"dz{i}") for i, c in enumerate(xcols)]
+        return plan, aggs
+
+    evs = []
+
+    def converged(m: dict) -> bool:
+        evs.append(basis(m)[2])
+        return len(evs) > 1 and bool(
+            np.all(np.abs(evs[-1] - evs[-2]) <= tol * np.maximum(evs[-1], 1.0))
+        )
+
+    state, report = superstep_loop(
+        base, step, converged, lambda df: truncate_state(df, n_part, VID), max_iter, n_part
+    )
     both.unpersist()
-    return state.select(VID, *xcols), xcols
+    return current(state, report)[0].select(VID, *xcols), xcols
 
 
 def _kmeans_assign(

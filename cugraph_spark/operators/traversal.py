@@ -11,11 +11,14 @@ Reference parity:
   same fixpoint, simpler plan, and each round is one shuffle join + one
   groupBy-min, which is what survives at cluster scale.
 
-Scale notes: the frontier is a small DataFrame (usually ≪ V rows) that
-broadcasts against the persisted, src-partitioned edge table — the big side
-never moves. Distances state is V rows, localCheckpoint-ed per round to cut
-lineage. Predecessor tie-break is ``min(predecessor)`` so results are
-deterministic at any parallelism.
+Scale notes: both loops run on ``graph.superstep_loop``.  The state holds
+only the reached vertices, hash-partitioned on ``id`` like the edge table on
+``src``, with a frontier flag (BFS: reached last round; SSSP: improved last
+round).  A superstep joins the flagged rows against the persisted edge
+table (the big side never moves), takes the min per ``dst`` and full-joins
+it back into the state: one Spark job, whose ``observe`` counts the new or
+improved vertices for the stop test.  Predecessor tie-break is
+``min(predecessor)`` so results are deterministic at any parallelism.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import DST, SRC, VID, WGT, LinkGraph, truncate_state
+from ..graph import DST, SRC, VID, WGT, LinkGraph, superstep_loop, truncate_state
 
 
 def _internal_source(graph: LinkGraph, source) -> int:
@@ -34,6 +37,22 @@ def _internal_source(graph: LinkGraph, source) -> int:
     if not row:
         raise ValueError(f"bfs/sssp: source vertex {source!r} not in graph")
     return int(row[0][0])
+
+
+def _traversal_result(graph: LinkGraph, state: DataFrame, unrenumber: bool) -> DataFrame:
+    """DF[vertex, distance, predecessor] from a [id, distance, pred, ...]
+    state; the predecessor is a vertex id too and maps back the same way
+    (-1 stays -1)."""
+    out = state.select(
+        F.col(VID).alias("vertex"), "distance", F.col("pred").alias("predecessor")
+    )
+    if unrenumber and graph.renumber_map is not None:
+        out = graph.unrenumber(graph.unrenumber(out, "vertex"), "predecessor").select(
+            "vertex",
+            "distance",
+            F.coalesce(F.col("predecessor"), F.lit(-1)).alias("predecessor"),
+        )
+    return out
 
 
 def bfs(
@@ -52,66 +71,37 @@ def bfs(
     s = _internal_source(graph, start)
     edges = graph.edges.select(SRC, DST)
 
-    # state: [id, distance, pred]; frontier: vertices discovered last round
-    state = truncate_state(
-        graph.spark.createDataFrame(
-            [(s, 0, -1)], f"{VID} LONG, distance INT, pred LONG"
-        ),
-        n_part,
-        VID,
-    )
-    frontier = state.select(VID)
-
-    depth = 0
-    limit = depth_limit if depth_limit is not None else 2**31 - 1
-    while depth < limit:
-        # expand: neighbors of the frontier not yet visited; pred = min(src)
+    def step(state: DataFrame, report):
+        # expand the vertices reached last round; pred = min(src)
+        frontier = state.filter("frontier").select(F.col(VID).alias(SRC))
         cand = (
-            edges.join(frontier.withColumnRenamed(VID, SRC), SRC)
+            edges.join(frontier.hint("shuffle_hash"), SRC)
             .groupBy(F.col(DST).alias(VID))
-            .agg(F.min(SRC).alias("pred"))
+            .agg(F.min(SRC).alias("_p"))
         )
-        new = (
-            cand.join(state.select(VID, F.lit(True).alias("_seen")), VID, "left")
-            .filter(F.col("_seen").isNull())
-            .select(VID, F.lit(depth + 1).alias("distance"), "pred")
+        plan = (
+            state.join(cand.hint("shuffle_hash"), VID, "full")
+            .select(
+                VID,
+                F.coalesce("distance", F.lit(report.iterations + 1)).alias("distance"),
+                F.coalesce("pred", "_p").alias("pred"),
+                F.col("distance").isNull().alias("frontier"),
+            )
         )
-        new = truncate_state(new, n_part, VID)
-        n_new = new.count()
-        if n_new == 0:
-            new.unpersist()
-            break
-        old_state = state
-        state = truncate_state(
-            state.union(new.select(VID, "distance", "pred")), n_part, VID
-        )
-        old_state.unpersist()
-        frontier = new.select(VID)
-        depth += 1
+        return plan, [F.sum(F.col("frontier").cast("int")).alias("new")]
 
-    out = state.select(
-        F.col(VID).alias("vertex"), "distance", F.col("pred").alias("predecessor")
+    # state: the reached vertices [id, distance, pred, frontier]
+    state, _ = superstep_loop(
+        graph.spark.createDataFrame(
+            [(s, 0, -1, True)], f"{VID} LONG, distance INT, pred LONG, frontier BOOLEAN"
+        ),
+        step,
+        lambda m: m["new"] == 0,
+        lambda df: truncate_state(df, n_part, VID),
+        depth_limit if depth_limit is not None else 2**31 - 1,
+        n_part,
     )
-    if unrenumber:
-        out = graph.unrenumber(out, "vertex")
-        if graph.renumber_map is not None:
-            # predecessor is also a vertex id; -1 stays -1
-            m = graph.renumber_map.select(
-                F.col(VID).alias("predecessor"), F.col("ext_id").alias("_p")
-            )
-            out = (
-                out.join(
-                    F.broadcast(m) if graph._map_small() else m,
-                    "predecessor",
-                    "left",
-                )
-                .select(
-                    "vertex",
-                    "distance",
-                    F.coalesce(F.col("_p"), F.lit(-1)).alias("predecessor"),
-                )
-            )
-    return out
+    return _traversal_result(graph, state, unrenumber)
 
 
 def sssp(
@@ -128,82 +118,49 @@ def sssp(
     s = _internal_source(graph, source)
     edges = graph.edges.select(SRC, DST, WGT)
 
-    dist = truncate_state(
-        graph.spark.createDataFrame(
-            [(s, 0.0, -1)], f"{VID} LONG, distance DOUBLE, pred LONG"
-        ),
-        n_part,
-        VID,
-    )
-    frontier = dist
-
-    for _ in range(max_iter):
+    def step(state: DataFrame, _report):
+        frontier = state.filter("active").select(
+            F.col(VID).alias(SRC), F.col("distance").alias("_d")
+        )
+        # deterministic argmin: smallest distance, then smallest pred
         relax = (
-            edges.join(
-                frontier.select(F.col(VID).alias(SRC), F.col("distance").alias("_d")),
-                SRC,
-            )
-            .select(
-                F.col(DST).alias(VID),
-                (F.col("_d") + F.col(WGT)).alias("nd"),
-                F.col(SRC).alias("npred"),
-            )
-            # deterministic argmin: smallest distance, then smallest pred
-            .groupBy(VID)
+            edges.join(frontier.hint("shuffle_hash"), SRC)
+            .groupBy(F.col(DST).alias(VID))
             .agg(
-                F.min(F.struct(F.col("nd"), F.col("npred"))).alias("best"),
+                F.min(
+                    F.struct(
+                        (F.col("_d") + F.col(WGT)).alias("nd"), F.col(SRC).alias("np")
+                    )
+                ).alias("_b")
             )
-            .select(VID, F.col("best.nd").alias("nd"), F.col("best.npred").alias("npred"))
         )
-        merged = (
-            dist.join(relax, VID, "full")
+        better = F.coalesce(
+            F.col("distance").isNull() | (F.col("_b.nd") < F.col("distance")),
+            F.lit(False),
+        )
+        plan = (
+            state.join(relax.hint("shuffle_hash"), VID, "full")
             .select(
-                F.col(VID),
-                F.col("distance"),
-                F.col("pred"),
-                F.col("nd"),
-                F.col("npred"),
+                VID,
+                F.when(better, F.col("_b.nd")).otherwise(F.col("distance")).alias("distance"),
+                F.when(better, F.col("_b.np")).otherwise(F.col("pred")).alias("pred"),
+                better.alias("active"),
             )
         )
-        improved = merged.filter(
-            F.col("distance").isNull() | (F.col("nd") < F.col("distance"))
-        ).select(VID, F.col("nd").alias("distance"), F.col("npred").alias("pred"))
-        improved = truncate_state(improved, n_part, VID)
-        if improved.count() == 0:
-            improved.unpersist()
-            break
-        kept = (
-            dist.join(improved.select(VID, F.lit(True).alias("_i")), VID, "left")
-            .filter(F.col("_i").isNull())
-            .select(VID, "distance", "pred")
-        )
-        old_dist = dist
-        dist = truncate_state(kept.union(improved), n_part, VID)
-        old_dist.unpersist()
-        frontier = improved
+        return plan, [F.sum(F.col("active").cast("int")).alias("improved")]
 
-    out = dist.select(
-        F.col(VID).alias("vertex"), "distance", F.col("pred").alias("predecessor")
+    # state: the reached vertices [id, distance, pred, active]
+    state, _ = superstep_loop(
+        graph.spark.createDataFrame(
+            [(s, 0.0, -1, True)], f"{VID} LONG, distance DOUBLE, pred LONG, active BOOLEAN"
+        ),
+        step,
+        lambda m: m["improved"] == 0,
+        lambda df: truncate_state(df, n_part, VID),
+        max_iter,
+        n_part,
     )
-    if unrenumber:
-        out = graph.unrenumber(out, "vertex")
-        if graph.renumber_map is not None:
-            m = graph.renumber_map.select(
-                F.col(VID).alias("predecessor"), F.col("ext_id").alias("_p")
-            )
-            out = (
-                out.join(
-                    F.broadcast(m) if graph._map_small() else m,
-                    "predecessor",
-                    "left",
-                )
-                .select(
-                    "vertex",
-                    "distance",
-                    F.coalesce(F.col("_p"), F.lit(-1)).alias("predecessor"),
-                )
-            )
-    return out
+    return _traversal_result(graph, state, unrenumber)
 
 
 def bfs_edges(

@@ -44,13 +44,21 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
+    """Build a SparkSession with engine defaults, or return the live one.
+
+    A live (active) session comes back as it is: nothing here is applied
+    to it, so a second call cannot move its shuffle partition count (or
+    any other setting) under code that already runs on it.  Defaults of a
+    new session:
 
     - AQE on (runtime skew-join splitting + partition coalescing),
     - Arrow on (all our kernels are pandas-on-Arrow, never per-row Python),
     - shuffle partitions pinned to core count locally (not the 200 default),
     - UTC session timezone for deterministic timestamp semantics.
     """
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .graph import superstep_loop, truncate_state
+from .session import get_spark
 
 _UNREACHED = 1.7976931348623157e308  # DBL_MAX, the reference's sentinel
 
@@ -210,19 +211,6 @@ def is_cugraph_graph_type(g):
     return g in [Graph, MultiGraph, LinkGraph]
 
 
-def _active_spark(spark=None):
-    if spark is not None:
-        return spark
-    from pyspark.sql import SparkSession
-
-    s = SparkSession.getActiveSession()
-    if s is not None:
-        return s
-    from .session import get_spark
-
-    return get_spark()
-
-
 def convert_from_nx(
     nxG,
     weight=None,
@@ -252,7 +240,7 @@ def convert_from_nx(
             f"nxG must be either a NetworkX Graph or DiGraph, got {type(nxG)}"
         )
 
-    spark = _active_spark(spark)
+    spark = spark or get_spark()
     if not nx.is_weighted(nxG, weight=weight):
         pdf = pd.DataFrame(nxG.edges(), columns=["src", "dst"])
         edge_attr = None
@@ -327,7 +315,7 @@ def ensure_cugraph_obj(obj, nx_weight_attr=None, matrix_graph_type=None):
     if is_nx_graph_type(input_type):
         return (convert_from_nx(obj, weight=nx_weight_attr), input_type)
     if is_matrix_type(input_type):
-        spark = _active_spark()
+        spark = get_spark()
         g = LinkGraph.from_scipy_sparse(spark, obj, directed=True)
         if matrix_graph_type not in (None, Graph) and not isinstance(
             matrix_graph_type, Graph

@@ -255,51 +255,73 @@ def test_truncate_state_stats_stay_exact(spark, karate_df, monkeypatch):
     gp.unpersist()
 
 
-def _run_loop(karate_df, loop: str) -> None:
-    """One run of the fixed-point loop of ``loop`` on karate."""
-    if loop == "operators.wcc":
-        weakly_connected_components(LinkGraph.from_edges(karate_df, directed=False))
-    elif loop == "operators.lpa":
-        from cugraph_spark.operators.lpa import label_propagation
+# case id → the module whose truncate_state the case's loop calls
+_LOOPS = {
+    "operators.wcc": "operators.wcc",
+    "operators.lpa": "operators.lpa",
+    "operators.centrality": "operators.centrality",
+    "csr": "csr",
+    "utilities": "utilities",
+    "bfs": "operators.traversal",
+    "sssp": "operators.traversal",
+    "hits": "operators.centrality",
+    "eigenvector": "operators.centrality",
+    "spectral-balanced": "operators.spectral",
+    "spectral-modularity": "operators.spectral",
+}
 
-        label_propagation(LinkGraph.from_edges(karate_df, directed=False))
-    elif loop == "operators.centrality":
-        from cugraph_spark.operators.centrality import katz_centrality
 
-        katz_centrality(LinkGraph.from_edges(karate_df, directed=True), max_iter=4, tol=0.0)
-    elif loop == "csr":
-        from cugraph_spark.csr import pagerank_csr
+def _run_loop(karate_df, case: str) -> None:
+    """One run of the fixed-point loop of ``case`` on karate."""
+    from cugraph_spark.csr import pagerank_csr
+    from cugraph_spark.operators import centrality, spectral, traversal
+    from cugraph_spark.operators.lpa import label_propagation
+    from cugraph_spark.utilities import get_traversed_cost
 
-        pagerank_csr(LinkGraph.from_edges(karate_df, directed=True), max_iter=4, tol=0.0)
-    else:
-        from cugraph_spark.operators.traversal import bfs
-        from cugraph_spark.utilities import get_traversed_cost
+    def graph(directed=True):
+        return LinkGraph.from_edges(karate_df, directed=directed)
 
+    def weighted():
         w = karate_df.withColumn("w", (karate_df["src"] + karate_df["dst"]).cast("double"))
-        g = LinkGraph.from_edges(w, weight="w", directed=False, renumber=False)
-        tree = bfs(g, 0).persist()
+        return LinkGraph.from_edges(w, weight="w", directed=False, renumber=False)
+
+    def traversed_cost():
+        g = weighted()
+        tree = traversal.bfs(g, 0).persist()
         tree.count()
         get_traversed_cost(tree, 0, g.edges)
 
+    runs = {
+        "operators.wcc": lambda: weakly_connected_components(graph(False)),
+        "operators.lpa": lambda: label_propagation(graph(False)),
+        "operators.centrality": lambda: centrality.katz_centrality(graph(), max_iter=4, tol=0.0),
+        "csr": lambda: pagerank_csr(graph(), max_iter=4, tol=0.0),
+        "utilities": traversed_cost,
+        "bfs": lambda: traversal.bfs(graph(), 0),
+        "sssp": lambda: traversal.sssp(weighted(), 0),
+        "hits": lambda: centrality.hits(graph(), max_iter=4, tol=0.0),
+        "eigenvector": lambda: centrality.eigenvector_centrality(graph(), max_iter=4, tol=0.0),
+        "spectral-balanced": lambda: spectral.spectral_balanced_cut_clustering(
+            graph(), 2, evs_max_iter=4
+        ),
+        "spectral-modularity": lambda: spectral.spectral_modularity_maximization_clustering(
+            graph(), 2, evs_max_iter=4
+        ),
+    }
+    runs[case]()
 
-@pytest.mark.parametrize(
-    "loop",
-    [
-        "operators.wcc",
-        "operators.lpa",
-        "operators.centrality",
-        "csr",
-        "utilities",
-    ],
-)
-def test_superstep_loop_one_job_per_superstep(spark, karate_df, monkeypatch, loop):
+
+@pytest.mark.parametrize("case", list(_LOOPS))
+def test_superstep_loop_one_job_per_superstep(spark, karate_df, monkeypatch, case):
     """Every loop on ``graph.superstep_loop`` runs each superstep as exactly
     one Spark job — the materialization, with the convergence scalars
     folded into it — with AQE at the session default.  Counted between
     consecutive returns of ``truncate_state`` as the loop's own module
-    calls it: the initial state, then one per superstep.  PageRank's loop
-    is pinned, with its plans, by the test above."""
+    calls it: the initial state, then one per superstep, and none after
+    the loop.  PageRank's loop is pinned, with its plans, by the test
+    above."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    loop = _LOOPS[case]
     seen = []
     real_loop = graph_mod.superstep_loop
 
@@ -313,7 +335,7 @@ def test_superstep_loop_one_job_per_superstep(spark, karate_df, monkeypatch, loo
     monkeypatch.setattr(mod, "superstep_loop", counting_loop)
     rec = _Truncations(monkeypatch, spark, loop)
     try:
-        _run_loop(karate_df, loop)
+        _run_loop(karate_df, case)
     finally:
         rec.close()
     before, steps = seen
