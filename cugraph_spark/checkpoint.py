@@ -8,11 +8,15 @@ Layout per iteration::
     <base>/<job>/iter=00012/data.parquet      the vertex-state DataFrame
     <base>/<job>/iter=00012/manifest.json     iteration, metrics, lineage
 
-``manifest.json`` carries per-partition row counts and content hashes
-(the lineage record: which partition produced what), wall-clock timings,
-and the caller's metrics (e.g. L1 delta, dangling mass). The manifest is
-written after the data — its presence marks the iteration complete, so a
-killed run resumes from the last complete manifest.
+``data.parquet`` holds one ``part-<pid>`` file when the state's plan size
+is at most the advisory partition size
+(``spark.sql.adaptive.advisoryPartitionSizeInBytes``), written by one task,
+and one per non-empty state partition otherwise.  ``manifest.json``
+carries each part file's row count and content hash (the lineage record:
+``pid`` is the part-file number), wall-clock timings, and the caller's
+metrics (e.g. L1 delta, dangling mass). The manifest is written after the
+data — its presence marks the iteration complete, so a killed run resumes
+from the last complete manifest.
 """
 
 from __future__ import annotations
@@ -23,6 +27,29 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def _coalesce_small(df: DataFrame) -> DataFrame:
+    """``df`` in one partition when its plan's byte size is at most the
+    session's advisory partition size, else ``df`` as it is.
+
+    A write costs a fixed ~0.1 CPU s per task (Hadoop and Parquet config
+    parsing) whatever its bytes, so a 50 KB state written from 4 partitions
+    costs 4× one task.  The loops checkpoint inside ``static_plan`` (AQE
+    off), so this does by hand the coalescing AQE would do.  The size comes
+    from the plan's statistics (no Spark job; exact for a ``truncate_state``
+    result).  Never to k > 1 partitions: ``coalesce(k)`` groups partitions
+    by block location, and the first job after a ``localCheckpoint`` sees
+    the scheduler's stale, empty location cache, so the write and the
+    lineage job grouped one state two ways (a 16-row part file under a
+    22-row lineage entry).
+    """
+    spark = df.sparkSession
+    advisory = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return df.coalesce(1) if int(size) <= advisory else df
 
 
 class CheckpointManager:
@@ -38,10 +65,12 @@ class CheckpointManager:
         t0 = time.time()
         d = self._iter_dir(iteration)
         data_path = os.path.join(d, "data.parquet")
+        df = _coalesce_small(df)
         df.write.mode("overwrite").parquet(data_path)
         t_write = time.time() - t0
 
-        # lineage: per-partition row count + order-insensitive content hash
+        # lineage: per-part-file row count + order-insensitive content hash,
+        # over the frame just written (spark_partition_id = part number)
         cols = df.columns
         lineage_rows = (
             df.withColumn("_pid", F.spark_partition_id())

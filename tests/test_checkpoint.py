@@ -106,3 +106,71 @@ def test_label_loop_resume_identical(spark, tmp_path, op):
     assert resumed == full
     assert ck.completed_iterations()[-1] == rounds
     g.unpersist()
+
+
+def _part_files(ck, iteration):
+    """{part number: path} of one checkpoint's ``data.parquet`` files."""
+    data = os.path.join(ck._iter_dir(iteration), "data.parquet")
+    return {
+        int(name.split("-")[1]): os.path.join(data, name)
+        for name in os.listdir(data)
+        if name.startswith("part-")
+    }
+
+
+def _assert_lineage_is_per_file(spark, ck, iteration):
+    """Every lineage entry describes exactly one written part file: its
+    ``pid`` is the file's number, and its rows and content hash are those
+    recomputed from that file alone."""
+    from pyspark.sql import functions as F
+
+    files = _part_files(ck, iteration)
+    lineage = ck.manifest(iteration)["lineage"]
+    entries = lineage["partitions"]
+    assert sorted(p["pid"] for p in entries) == sorted(files), (entries, files)
+    for p in entries:
+        df = spark.read.parquet(files[p["pid"]])
+        crc = F.crc32(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in df.columns]))
+        got = df.agg(F.count("*").alias("rows"), F.sum(crc).alias("hash")).first()
+        assert (p["rows"], p["content_hash"]) == (got["rows"], got["hash"]), p
+    assert sum(p["rows"] for p in entries) == lineage["total_rows"]
+    return files
+
+
+def test_small_state_checkpoints_one_file(spark, tmp_path):
+    """A state far below the advisory partition size is written as one
+    part file, described by one lineage entry holding every vertex."""
+    g = _build(spark, karate_edges())
+    ck = CheckpointManager(str(tmp_path), "pr")
+    pagerank(g, tol=0, max_iter=2, checkpointer=ck, fail_on_nonconvergence=False)
+    it = ck.completed_iterations()[-1]
+    assert len(_assert_lineage_is_per_file(spark, ck, it)) == 1
+    [entry] = ck.manifest(it)["lineage"]["partitions"]
+    assert entry["rows"] == 34
+    g.unpersist()
+
+
+def test_multi_file_checkpoint_lineage_and_resume(spark, tmp_path):
+    """With an advisory partition size of a few hundred bytes the WCC state
+    is written as several part files, one lineage entry each, and a run
+    resumed from that checkpoint ends where an uninterrupted run ends."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    g = _build(spark, seeded_graph(40, 80, seed=2))
+    full = {tuple(r) for r in weakly_connected_components(g, shortcutting=False).collect()}
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "300b")
+    try:
+        ck = CheckpointManager(str(tmp_path), "wcc")
+        weakly_connected_components(g, max_iter=1, shortcutting=False, checkpointer=ck)
+        assert ck.completed_iterations() == [1]
+        assert len(_assert_lineage_is_per_file(spark, ck, 1)) > 1
+        resumed = weakly_connected_components(g, shortcutting=False, checkpointer=ck)
+        resumed = {tuple(r) for r in resumed.collect()}
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert ck.completed_iterations()[-1] > 1
+    assert resumed == full
+    g.unpersist()

@@ -222,6 +222,43 @@ def test_pagerank_superstep_one_exchange_one_job(
     g.unpersist()
 
 
+def test_checkpointed_superstep_task_budget(spark, karate_df, monkeypatch, tmp_path):
+    """A checkpointed PageRank superstep on a small state runs 3 Spark jobs
+    between consecutive ``truncate_state`` returns: the checkpoint write,
+    its lineage aggregate and the next materialization.  The write and the
+    lineage run one task each: the checkpoint is sized by the state's
+    bytes, not by its partition count (4 here)."""
+    from cugraph_spark.checkpoint import CheckpointManager
+
+    g = LinkGraph.from_edges(karate_df, directed=True, num_partitions=4)
+    sc = spark.sparkContext
+    group = "truncations-operators.pagerank"
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    rec = _Truncations(monkeypatch, spark, "operators.pagerank")
+    try:
+        res = pagerank(
+            g, tol=0.0, max_iter=4, checkpointer=CheckpointManager(str(tmp_path), "pr"),
+            fail_on_nonconvergence=False,
+        )
+    finally:
+        rec.close()
+    assert res.iterations == 4
+    supersteps = rec.jobs[-(res.iterations + 1):]
+    # no checkpoint before the first superstep
+    assert [b - a for a, b in zip(supersteps, supersteps[1:])] == [1, 3, 3, 3], supersteps
+    # the recorded counts include the group's jobs of earlier tests
+    jobs = sorted(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
+
+    def tasks(job_id):
+        stages = sc.statusTracker().getJobInfo(job_id).stageIds
+        return sum(sc.statusTracker().getStageInfo(s).numCompletedTasks for s in stages)
+
+    for start in supersteps[1:-1]:
+        write, lineage, _next = jobs[start - len(before):start - len(before) + 3]
+        assert (tasks(write), tasks(lineage)) == (1, 1)
+    g.unpersist()
+
+
 def test_truncate_state_stats_stay_exact(spark, karate_df, monkeypatch):
     """After 120 supersteps the state's sizeInBytes has as many digits as
     after superstep 1: the materialized size, not an estimate compounded
