@@ -1,5 +1,6 @@
 """Benchmark driver: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (the affinity CPU count
+when unset).
 
 Prints exactly ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -32,7 +33,7 @@ from cugraph_spark.operators import (
 )
 from cugraph_spark import text as tx
 from cugraph_spark import vector as vec
-from cugraph_spark.session import get_spark
+from cugraph_spark.session import _host_cpus, get_spark
 
 BENCH_K = 50_000
 
@@ -82,7 +83,7 @@ def _capacity_probe(cpus: int) -> dict:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _host_cpus()
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
     probe = _capacity_probe(cpus)  # before the JVM exists: nothing to contend
 

@@ -6,8 +6,9 @@ Reference parity: ``python/cugraph/cugraph/community/ktruss_subgraph.py:
 Algorithm: iterated support filter (SURVEY §2.3 "iterated triangle-support
 filter"): compute per-edge triangle support with the same degree-oriented
 wedge join as triangle counting, drop edges with support < k−2, repeat to
-fixpoint. Each round is bounded by the oriented adjacency (≤ O(√E) per
-list); the edge set only shrinks, and per-round state is truncated.
+fixpoint, after triangle counting's degree peel (``triangles._peel``) to
+the (k−1)-core. Each round is bounded by the oriented adjacency (≤ O(√E)
+per list); the edge set only shrinks, and per-round state is truncated.
 """
 
 from __future__ import annotations
@@ -15,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import DST, SRC, VID, LinkGraph, truncate_state
+from ..graph import DST, SRC, LinkGraph, truncate_state
+from .triangles import _peel
 
 
 def _edge_support(und: DataFrame) -> DataFrame:
@@ -79,50 +81,26 @@ def k_truss(graph: LinkGraph, k: int, unrenumber: bool = True) -> DataFrame:
         )
         .distinct()
     )
-    und = truncate_state(und, n_part, SRC)
-
     # (k−1)-core pre-peel: an edge of the k-truss needs k−2 common
-    # neighbors, so both endpoints need degree ≥ k−1 — peel cheaper
-    # degree-filters before the expensive support rounds (the reference's
-    # 2-core prune generalized, ``triangle_count_impl.cuh:238-273``).
-    # Partial peeling is correctness-neutral (the support loop below is the
-    # fixpoint); cap the rounds and stop on diminishing returns.
-    for _ in range(5):
-        dg = (
-            und.select(F.col(SRC).alias("v"))
-            .union(und.select(F.col(DST).alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("d"))
-        )
-        low = dg.filter(F.col("d") < k - 1).select("v")
-        # re-pin column order: a USING join moves its key first, so after
-        # the DST anti-join the frame is (dst, src) — and the positional
-        # UNION in the orientation step would silently swap endpoints
-        pruned = truncate_state(
-            und.join(low.withColumnRenamed("v", SRC), SRC, "left_anti")
-            .join(low.withColumnRenamed("v", DST), DST, "left_anti")
-            .select(SRC, DST),
-            n_part,
-            SRC,
-        )
-        before_cnt, after_cnt = und.count(), pruned.count()
-        if after_cnt == before_cnt:
-            pruned.unpersist()
-            break
-        und.unpersist()
-        und = pruned
-        if after_cnt > 0.95 * before_cnt:
-            break
+    # neighbors, so both endpoints need degree ≥ k−1 — triangle counting's
+    # capped degree peel drops such edges cheaply before the expensive
+    # support rounds (partial peeling is correctness-neutral: the support
+    # loop below is the fixpoint)
+    und, deg = _peel(und, k - 1, n_part)
+    if deg is not None:
+        deg.unpersist()
 
+    n_und = und.count()
     while True:
         sup = _edge_support(und)
         kept = sup.filter(F.col("support") >= k - 2).select(SRC, DST)
         kept = truncate_state(kept, n_part, SRC)
-        removed = und.count() - kept.count()
+        n_kept = kept.count()
         und.unpersist()
         und = kept
-        if removed == 0:
+        if n_kept == n_und:
             break
+        n_und = n_kept
 
     out = und
     if unrenumber:

@@ -6,8 +6,10 @@ Reference parity: ``python/cugraph/cugraph/tree/minimum_spanning_tree.py:
 Borůvka rounds: every component picks its minimum-weight outgoing edge
 (deterministic tie-break on (weight, a, b)), all picked edges join the
 forest, touched components merge via a hash-min fixpoint on the (tiny)
-component graph. O(log V) rounds, each one join+groupBy over the edge
-set — the classic shuffle-friendly MST.
+component graph: WCC's step (``wcc._min_label_step``) on
+``graph.superstep_loop``, one Spark job per superstep. O(log V) rounds,
+each one join+groupBy over the edge set — the classic shuffle-friendly
+MST.
 """
 
 from __future__ import annotations
@@ -15,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..graph import DST, SRC, VID, WGT, LinkGraph, truncate_state
+from ..graph import DST, SRC, VID, WGT, LinkGraph, superstep_loop, truncate_state
+from .wcc import _min_label_step
 
 
 def minimum_spanning_tree(
@@ -75,51 +78,38 @@ def minimum_spanning_tree(
         forest = picked if forest is None else forest.union(picked)
         forest = truncate_state(forest, n_part, "a")
 
-        # merge components: hash-min fixpoint on the component graph
+        # merge components: WCC's hash-min step on the component graph
         ca2 = comp.select(F.col("v").alias("a"), F.col("c").alias("pca"))
         cb2 = comp.select(F.col("v").alias("b"), F.col("c").alias("pcb"))
         cedges = (
             picked.join(ca2, "a").join(cb2, "b").select(
-                F.col("pca").alias("x"), F.col("pcb").alias("y")
+                F.col("pca").alias(SRC), F.col("pcb").alias(DST)
             )
         )
-        cedges = cedges.union(cedges.select(F.col("y").alias("x"), F.col("x").alias("y")))
-        clabels = cedges.select(F.col("x").alias("c")).distinct().select(
-            "c", F.col("c").alias("lbl")
+        cedges = truncate_state(
+            cedges.union(cedges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))),
+            n_part,
+            SRC,
         )
-        clabels = truncate_state(clabels, n_part, "c")
-        while True:
-            nbr = (
-                cedges.join(clabels.withColumnRenamed("c", "x"), "x")
-                .groupBy(F.col("y").alias("c"))
-                .agg(F.min("lbl").alias("nl"))
-            )
-            new_labels = truncate_state(
-                clabels.join(nbr, "c", "left").select(
-                    "c", F.least(F.col("lbl"), F.coalesce("nl", "lbl")).alias("lbl")
-                ),
-                n_part,
-                "c",
-            )
-            ch = (
-                new_labels.join(clabels.withColumnRenamed("lbl", "ol"), "c")
-                .filter(F.col("lbl") != F.col("ol"))
-                .limit(1)
-                .count()
-            )
-            clabels.unpersist()
-            clabels = new_labels
-            if ch == 0:
-                break
+        # no iteration cap: hash-min on a finite graph always converges
+        clabels, _ = superstep_loop(
+            cedges.select(F.col(SRC).alias(VID)).distinct().withColumn("label", F.col(VID)),
+            _min_label_step(cedges),
+            lambda m: m["changed"] == 0,
+            lambda df: truncate_state(df, n_part, VID),
+            2**31 - 1,
+            n_part,
+        )
         old_comp = comp
         comp = truncate_state(
-            comp.join(clabels, "c", "left").select(
-                "v", F.coalesce("lbl", "c").alias("c")
+            comp.join(clabels.withColumnRenamed(VID, "c"), "c", "left").select(
+                "v", F.coalesce("label", "c").alias("c")
             ),
             n_part,
             "v",
         )
         old_comp.unpersist()
+        cedges.unpersist()
         clabels.unpersist()
 
     if forest is None:

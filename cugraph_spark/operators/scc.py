@@ -10,15 +10,20 @@ to a scale-out setting — we use the standard coloring/FW-BW scheme
 repeat until no vertices remain:
   1. TRIM: peel vertices with zero in- or out-degree in the remaining
      subgraph (each is a singleton SCC).
-  2. COLOR: propagate ``color(v) = max(v, max over in-neighbors)`` to
-     fixpoint (forward reachability from each color root).
+  2. COLOR: propagate ``color(v) = min(v, min over in-neighbors)`` to
+     fixpoint, so color(v) is the minimum id that reaches v.  This is
+     WCC's hash-min step (``wcc._min_label_step``) on the directed edges;
+     its pointer jump stays valid because reachability is transitive.
   3. MARK: from every color root r (where color(r) == r), walk REVERSE
      edges restricted to same-colored vertices; the marked set is exactly
-     the SCC of r. Assign label = root, remove those vertices, repeat.
+     the SCC of r, and r is its minimum member.  Label it r, remove it,
+     repeat.
 
-Every step is the same edges⋈state → groupBy → merge superstep as WCC,
-with per-round state truncation; outer rounds are few in practice (each
-round removes at least one SCC per color class).
+COLOR and MARK run on ``graph.superstep_loop`` (one Spark job per
+superstep; MARK is a frontier loop shaped like ``traversal.bfs``).  TRIM
+and the outer rounds keep loops of their own: their state is two frames
+(vertices and edges).  Outer rounds are few in practice (each round
+removes the SCC of every color root).
 """
 
 from __future__ import annotations
@@ -29,7 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..exceptions import FailedToConvergeError
-from ..graph import DST, SRC, VID, LinkGraph, truncate_state
+from ..graph import DST, SRC, VID, LinkGraph, superstep_loop, truncate_state
+from .wcc import _labels_out, _min_label_step
 
 
 def strongly_connected_components(
@@ -39,18 +45,16 @@ def strongly_connected_components(
     unrenumber: bool = True,
     fail_on_nonconvergence: bool = False,
 ) -> DataFrame:
-    """DF[vertex, labels] — label = component's minimum-reachable root id
-    class representative (stable across runs; component PARTITION equality
-    is the contract, as in the reference's tests)."""
+    """DF[vertex, labels] — label = the component's minimum internal id,
+    mapped back to external ids when the graph is renumbered (each class
+    then takes its minimum external member, as in WCC)."""
     n_part = graph.num_partitions
 
     edges = truncate_state(
         graph.edges.select(SRC, DST).distinct(), n_part, SRC
     )
-    verts = truncate_state(
-        graph.vertices().select(F.col(VID).alias("v")), n_part, "v"
-    )
-    assigned = None  # accumulated [v, labels]
+    verts = truncate_state(graph.vertices().select(VID), n_part, VID)
+    assigned = None  # accumulated [id, label]
 
     for _ in range(max_outer):
         if verts.limit(1).count() == 0:
@@ -58,94 +62,53 @@ def strongly_connected_components(
 
         # ---- 1. trim singleton SCCs (no in- or no out-edge remaining)
         while True:
-            srcs = edges.select(F.col(SRC).alias("v")).distinct()
-            dsts = edges.select(F.col(DST).alias("v")).distinct()
-            keep = srcs.join(dsts, "v")  # has both in- and out-edges
-            trimmed = verts.join(keep, "v", "left_anti")
-            trimmed = truncate_state(trimmed, n_part, "v")
+            srcs = edges.select(F.col(SRC).alias(VID)).distinct()
+            dsts = edges.select(F.col(DST).alias(VID)).distinct()
+            keep = srcs.join(dsts, VID)  # has both in- and out-edges
+            trimmed = verts.join(keep, VID, "left_anti")
+            trimmed = truncate_state(trimmed, n_part, VID)
             if trimmed.limit(1).count() == 0:
                 trimmed.unpersist()
                 break
-            singletons = trimmed.select("v", F.col("v").alias("labels"))
+            singletons = trimmed.select(VID, F.col(VID).alias("label"))
             assigned = (
                 singletons
                 if assigned is None
                 else assigned.union(singletons)
             )
-            assigned = truncate_state(assigned, n_part, "v")
-            old_v, old_e = verts, edges
-            verts = truncate_state(verts.join(trimmed, "v", "left_anti"), n_part, "v")
-            edges = truncate_state(
-                edges.join(trimmed.withColumnRenamed("v", SRC), SRC, "left_anti")
-                .join(trimmed.withColumnRenamed("v", DST), DST, "left_anti"),
-                n_part,
-                SRC,
-            )
-            old_v.unpersist()
-            old_e.unpersist()
+            assigned = truncate_state(assigned, n_part, VID)
+            verts, edges = _remove(verts, edges, trimmed, n_part)
             trimmed.unpersist()
 
         if verts.limit(1).count() == 0:
             break
 
-        # ---- 2. forward max-color propagation to fixpoint
-        colors = truncate_state(verts.select("v", F.col("v").alias("c")), n_part, "v")
-        for _ in range(max_inner):
-            pushed = (
-                edges.join(colors.select(F.col("v").alias(SRC), "c"), SRC)
-                .groupBy(F.col(DST).alias("v"))
-                .agg(F.max("c").alias("nc"))
-            )
-            new_colors = (
-                colors.join(pushed.hint("shuffle_hash"), "v", "left")
-                .select("v", F.greatest(F.col("c"), F.coalesce("nc", "c")).alias("c"))
-            )
-            new_colors = truncate_state(new_colors, n_part, "v")
-            changed = (
-                new_colors.join(colors.withColumnRenamed("c", "oc"), "v")
-                .filter(F.col("c") != F.col("oc"))
-                .limit(1)
-                .count()
-            )
-            colors.unpersist()
-            colors = new_colors
-            if changed == 0:
-                break
+        # ---- 2. forward min-color propagation to fixpoint
+        colors, _ = superstep_loop(
+            verts.withColumn("label", F.col(VID)),
+            _min_label_step(edges),
+            lambda m: m["changed"] == 0,
+            lambda df: truncate_state(df, n_part, VID),
+            max_inner,
+            n_part,
+        )
 
         # ---- 3. backward mark within color from each root
-        roots = colors.filter(F.col("v") == F.col("c")).select("v", "c")
-        marked = truncate_state(roots, n_part, "v")
-        rev = edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-        for _ in range(max_inner):
-            step = (
-                rev.join(marked.select(F.col("v").alias(SRC), "c"), SRC)
-                .select(F.col(DST).alias("v"), "c")
-                .distinct()
-                .join(colors.withColumnRenamed("c", "vc"), "v")
-                .filter(F.col("c") == F.col("vc"))  # stay inside the color
-                .select("v", "c")
-                .join(marked.select("v"), "v", "left_anti")
-            )
-            step = truncate_state(step, n_part, "v")
-            if step.limit(1).count() == 0:
-                step.unpersist()
-                break
-            marked = truncate_state(marked.union(step), n_part, "v")
-
-        scc = marked.select("v", F.col("c").alias("labels"))
-        assigned = scc if assigned is None else assigned.union(scc)
-        assigned = truncate_state(assigned, n_part, "v")
-
-        old_v, old_e = verts, edges
-        verts = truncate_state(verts.join(marked.select("v"), "v", "left_anti"), n_part, "v")
-        edges = truncate_state(
-            edges.join(marked.select(F.col("v").alias(SRC)), SRC, "left_anti")
-            .join(marked.select(F.col("v").alias(DST)), DST, "left_anti"),
+        marked, _ = superstep_loop(
+            colors.filter(F.col(VID) == F.col("label")).select(
+                VID, F.col("label").alias("c"), F.lit(True).alias("frontier")
+            ),
+            _mark_step(edges, colors),
+            lambda m: m["new"] == 0,
+            lambda df: truncate_state(df, n_part, VID),
+            max_inner,
             n_part,
-            SRC,
         )
-        old_v.unpersist()
-        old_e.unpersist()
+
+        scc = marked.select(VID, F.col("c").alias("label"))
+        assigned = scc if assigned is None else assigned.union(scc)
+        assigned = truncate_state(assigned, n_part, VID)
+        verts, edges = _remove(verts, edges, marked, n_part)
         colors.unpersist()
         marked.unpersist()
     else:
@@ -165,19 +128,52 @@ def strongly_connected_components(
             if fail_on_nonconvergence:
                 raise FailedToConvergeError(msg)
             warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        leftover = verts.select("v", F.col("v").alias("labels"))
+        leftover = verts.select(VID, F.col(VID).alias("label"))
         assigned = leftover if assigned is None else assigned.union(leftover)
 
     if assigned is None:
         # zero-vertex graph: empty [vertex, labels] frame, not an error
-        assigned = graph.spark.createDataFrame([], "v LONG, labels LONG")
+        assigned = graph.spark.createDataFrame([], f"{VID} LONG, label LONG")
+    return _labels_out(graph, assigned, "labels", unrenumber)
 
-    out = assigned.select(F.col("v").alias("vertex"), "labels")
-    if unrenumber:
-        out = graph.unrenumber(out, "vertex")
-        if graph.renumber_map is not None:
-            comp_min = out.groupBy("labels").agg(F.min("vertex").alias("_canon"))
-            out = out.join(comp_min, "labels").select(
-                "vertex", F.col("_canon").alias("labels")
-            )
-    return out
+
+def _remove(verts: DataFrame, edges: DataFrame, gone: DataFrame, n_part: int) -> tuple:
+    """``(verts, edges)`` without the vertices of ``gone`` and every edge
+    that touches one; the old frames are unpersisted."""
+    ids = gone.select(VID)
+    new_verts = truncate_state(verts.join(ids, VID, "left_anti"), n_part, VID)
+    new_edges = truncate_state(
+        edges.join(ids.withColumnRenamed(VID, SRC), SRC, "left_anti")
+        .join(ids.withColumnRenamed(VID, DST), DST, "left_anti"),
+        n_part,
+        SRC,
+    )
+    verts.unpersist()
+    edges.unpersist()
+    return new_verts, new_edges
+
+
+def _mark_step(edges: DataFrame, colors: DataFrame):
+    """The backward-mark superstep: a ``superstep_loop`` step on the marked
+    vertices [id, c, frontier] that adds every unmarked in-neighbor of the
+    frontier whose color is c.  Its scalar ``new`` counts the added
+    vertices, the next frontier."""
+    color = colors.select(F.col(VID).alias(SRC), F.col("label").alias("_vc"))
+
+    def step(marked: DataFrame, _report):
+        frontier = marked.filter("frontier").select(F.col(VID).alias(DST), "c")
+        cand = (
+            edges.join(frontier.hint("shuffle_hash"), DST)
+            .join(color.hint("shuffle_hash"), SRC)
+            .filter(F.col("c") == F.col("_vc"))  # stay inside the color
+            .groupBy(F.col(SRC).alias(VID))
+            .agg(F.min("c").alias("_c"))
+        )
+        plan = marked.join(cand.hint("shuffle_hash"), VID, "full").select(
+            VID,
+            F.coalesce("c", "_c").alias("c"),
+            F.col("c").isNull().alias("frontier"),
+        )
+        return plan, [F.sum(F.col("frontier").cast("int")).alias("new")]
+
+    return step

@@ -59,50 +59,7 @@ def triangle_count(
         .distinct()
     )
 
-    # 2-core prune (impl.cuh:238-273): peel degree<2 vertices before the
-    # expensive orientation/intersection — at web scale this drops the long
-    # tail of degree-1 leaves.  Partial pruning is still CORRECT (a pruned
-    # vertex can never be in a triangle), so the peel is capped: each round
-    # costs one E-row aggregation and pays for itself only while large
-    # leaf-fringes remain.
-    und = truncate_state(und, n_part, SRC)
-    before_cnt = und.count()  # carried across rounds — one count action/round
-    deg = None
-    for _ in range(5):
-        dg = (
-            und.select(F.col(SRC).alias("v"))
-            .union(und.select(F.col(DST).alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("d"))
-            .persist()
-        )
-        low = dg.filter(F.col("d") < 2).select("v")
-        # every vertex in dg has d >= 1, so "low empty" <=> this round's
-        # anti-join would remove nothing (the old after==before case) —
-        # probing it on the cached dg is a V-row filter, and on a
-        # leaf-free graph it short-circuits the whole round AND donates
-        # dg as the orientation degree frame (skips a second E-row agg)
-        if low.count() == 0:
-            deg = dg.withColumnRenamed("d", "deg")
-            break
-        # re-pin column order: a USING join moves its key first, so after
-        # the DST anti-join the frame is (dst, src) — and the positional
-        # UNION in the orientation step would silently swap endpoints
-        pruned = truncate_state(
-            und.join(low.withColumnRenamed("v", SRC), SRC, "left_anti")
-            .join(low.withColumnRenamed("v", DST), DST, "left_anti")
-            .select(SRC, DST),
-            n_part,
-            SRC,
-        )
-        after_cnt = pruned.count()
-        dg.unpersist()
-        und.unpersist()
-        und = pruned
-        # diminishing returns: stop once a round removes <5% of edges
-        if after_cnt > 0.95 * before_cnt:
-            break
-        before_cnt = after_cnt
+    und, deg = _peel(und, 2, n_part)
 
     # degree on the simple undirected graph (unless the peel's last round
     # already proved its degree frame current and donated it above)
@@ -203,3 +160,55 @@ def total_triangles(graph: LinkGraph) -> int:
     df = triangle_count(graph, unrenumber=False)
     s = df.agg(F.sum("counts")).collect()[0][0] or 0
     return int(s // 3)
+
+
+def _peel(und: DataFrame, min_deg: int, n_part: int) -> tuple:
+    """``(und, deg)``: the canonical undirected pairs ``und`` [src, dst],
+    materialized src-partitioned, after peeling vertices of degree below
+    ``min_deg``, and the [v, deg] frame (persisted) of the result when the
+    peel's last round proved it current, else None."""
+    und = truncate_state(und, n_part, SRC)
+    # core prune (impl.cuh:238-273): peel degree<min_deg vertices before the
+    # expensive orientation/intersection — at web scale this drops the long
+    # tail of degree-1 leaves.  Partial pruning is still CORRECT (a pruned
+    # vertex has too few neighbors: a triangle needs 2, a k-truss edge k−1),
+    # so the peel is capped: each round costs one E-row aggregation and
+    # pays for itself only while large leaf-fringes remain.
+    before_cnt = und.count()  # carried across rounds — one count action/round
+    deg = None
+    for _ in range(5):
+        dg = (
+            und.select(F.col(SRC).alias("v"))
+            .union(und.select(F.col(DST).alias("v")))
+            .groupBy("v")
+            .agg(F.count("*").alias("d"))
+            .persist()
+        )
+        low = dg.filter(F.col("d") < min_deg).select("v")
+        # every vertex in dg has d >= 1, so "low empty" <=> this round's
+        # anti-join would remove nothing (the old after==before case) —
+        # probing it on the cached dg is a V-row filter, and on a
+        # leaf-free graph it short-circuits the whole round AND donates
+        # dg as the orientation degree frame (skips a second E-row agg)
+        if low.count() == 0:
+            deg = dg.withColumnRenamed("d", "deg")
+            break
+        # re-pin column order: a USING join moves its key first, so after
+        # the DST anti-join the frame is (dst, src) — and the positional
+        # UNION in the orientation step would silently swap endpoints
+        pruned = truncate_state(
+            und.join(low.withColumnRenamed("v", SRC), SRC, "left_anti")
+            .join(low.withColumnRenamed("v", DST), DST, "left_anti")
+            .select(SRC, DST),
+            n_part,
+            SRC,
+        )
+        after_cnt = pruned.count()
+        dg.unpersist()
+        und.unpersist()
+        und = pruned
+        # diminishing returns: stop once a round removes <5% of edges
+        if after_cnt > 0.95 * before_cnt:
+            break
+        before_cnt = after_cnt
+    return und, deg

@@ -15,7 +15,9 @@ reference tests also allow (``tests/components/test_connectivity.py:322-342``).
 Spark plan per round: one join (labels→edges by src, big side pre-partitioned
 and persisted, never re-shuffled) + one groupBy(dst).min + a least() merge;
 the changed-label count folds into the same materialization, and the loop
-is ``graph.superstep_loop``. A 'shortcut' pointer-jumping round
+is ``graph.superstep_loop``.  The round is a module function,
+``_min_label_step``, that SCC's coloring (on directed edges) and MST's
+component merge run as well. A 'shortcut' pointer-jumping round
 (label ← label-of-label) is applied each sweep, collapsing long chains so
 rounds = O(log diameter) instead of O(diameter) — this stays within the
 hash-min family (min is still the combiner) but is essential at web scale
@@ -42,6 +44,27 @@ def weakly_connected_components(
     n_part = graph.num_partitions
     # symmetrize view for connectivity only (impl.cuh:285-287)
     edges, owned_edges = _undirected_pairs(graph)
+
+    labels, _ = superstep_loop(
+        graph.vertices().withColumn("label", F.col(VID)),
+        _min_label_step(edges, shortcutting),
+        lambda m: m["changed"] == 0,
+        lambda df: truncate_state(df, n_part, VID),
+        max_iter,
+        n_part,
+        checkpointer=checkpointer,
+    )
+    if owned_edges:
+        edges.unpersist()
+    return _labels_out(graph, labels, "labels", unrenumber)
+
+
+def _min_label_step(edges: DataFrame, shortcutting: bool = True):
+    """The hash-min superstep over ``edges`` [src, dst] (src-partitioned):
+    a ``superstep_loop`` step on an [id, label] state that takes each
+    vertex's minimum over its own and its in-neighbors' labels, then,
+    with ``shortcutting``, jumps label ← label(label).  Its scalar is
+    ``changed``; the loop converges when it reads 0."""
 
     def step(labels: DataFrame, _report):
         nbr_min = (
@@ -78,18 +101,7 @@ def weakly_connected_components(
             )
         return new_labels, [_changed_labels()]
 
-    labels, _ = superstep_loop(
-        graph.vertices().withColumn("label", F.col(VID)),
-        step,
-        lambda m: m["changed"] == 0,
-        lambda df: truncate_state(df, n_part, VID),
-        max_iter,
-        n_part,
-        checkpointer=checkpointer,
-    )
-    if owned_edges:
-        edges.unpersist()
-    return _labels_out(graph, labels, "labels", unrenumber)
+    return step
 
 
 def _undirected_pairs(graph: LinkGraph) -> tuple:

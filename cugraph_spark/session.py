@@ -1,8 +1,9 @@
 """SparkSession factory for the link-graph engine.
 
-Local-mode defaults tuned for the sandbox (local[32], single JVM); on a real
-cluster the same builder flags apply unchanged — AQE, Arrow, and a shuffle
-partition count matched to total cores are what matter at 100 TB scale.
+Local-mode defaults sized to the host (``local[n]`` over the n CPUs this
+process may use, single JVM); on a real cluster the same builder flags apply
+unchanged — AQE, Arrow, and a shuffle partition count matched to total
+cores are what matter at 100 TB scale.
 """
 
 from __future__ import annotations
@@ -10,10 +11,24 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import warnings
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _host_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if it is a positive integer, else the number of
+    CPUs this process may run on (with a warning when the variable is set
+    but malformed: a bad value must not break the session)."""
+    cpus = len(os.sched_getaffinity(0))
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    if not raw:
+        return cpus
+    if raw.isdecimal() and int(raw) > 0:
+        return int(raw)
+    msg = f"SPARK_GRAFT_CPUS={raw!r} is not a positive integer; using {cpus}"
+    warnings.warn(msg, RuntimeWarning, stacklevel=2)
+    return cpus
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -53,15 +68,16 @@ def get_spark(
 
     - AQE on (runtime skew-join splitting + partition coalescing),
     - Arrow on (all our kernels are pandas-on-Arrow, never per-row Python),
-    - shuffle partitions pinned to core count locally (not the 200 default),
+    - ``local[n]`` and n shuffle partitions (not the 200 default), n =
+      ``SPARK_GRAFT_CPUS`` or the CPUs this process may use,
     - UTC session timezone for deterministic timestamp semantics.
     """
     live = SparkSession.getActiveSession()
     if live is not None:
         return live
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = _host_cpus()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    nshuffle = shuffle_partitions or cores
     # shuffle/checkpoint scratch on tmpfs when available: the iterative
     # workloads write O(E) shuffle bytes per superstep, and a spinning /tmp
     # makes the job disk-bound (on a real cluster this is local NVMe).

@@ -44,13 +44,11 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    # sized to the host: SPARK_GRAFT_CPUS threads (nproc when unset) and a
-    # 3g fixed heap (SPARK_GRAFT_DRIVER_MEM overrides), not get_spark's 12g
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    # sized to the host (get_spark: SPARK_GRAFT_CPUS threads, the affinity
+    # CPU count when unset) and a 3g fixed heap (SPARK_GRAFT_DRIVER_MEM
+    # overrides), not get_spark's 12g
     spark = get_spark(
         "oracle_check",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
         extra_conf={"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "3g")},
     )
     con = duckdb.connect()

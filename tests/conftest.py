@@ -16,15 +16,10 @@ from cugraph_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    # sized to the host: more local threads than cores only adds per-task
+    # get_spark sizes the session to the host (SPARK_GRAFT_CPUS, else the
+    # affinity CPU count): more local threads than cores only adds per-task
     # overhead to the many small jobs of the suite
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
-    s = get_spark(
-        app_name="cugraph_spark_tests",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        extra_conf={"spark.driver.memory": "8g"},
-    )
+    s = get_spark(app_name="cugraph_spark_tests", extra_conf={"spark.driver.memory": "8g"})
     yield s
     s.stop()
 

@@ -58,6 +58,17 @@ def test_scc_on_directed_cycle_graph(spark):
     g.unpersist()
 
 
+def test_scc_labels_are_minimum_members_without_renumber(spark):
+    """On a renumber=False graph each SCC is labeled by its minimum member
+    (the documented label, and WCC's), not by its maximum."""
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 3), (5, 6)]
+    df = spark.createDataFrame(edges, "src LONG, dst LONG")
+    g = LinkGraph.from_edges(df, directed=True, renumber=False)
+    got = {r.vertex: r.labels for r in strongly_connected_components(g).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 3, 6: 6}
+    g.unpersist()
+
+
 def test_scc_matches_networkx_on_seeded_digraph(spark):
     import numpy as np
 

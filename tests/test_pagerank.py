@@ -305,13 +305,21 @@ _LOOPS = {
     "eigenvector": "operators.centrality",
     "spectral-balanced": "operators.spectral",
     "spectral-modularity": "operators.spectral",
+    "scc": "operators.scc",
+    "mst": "operators.mst",
 }
 
 
 def _run_loop(karate_df, case: str) -> None:
     """One run of the fixed-point loop of ``case`` on karate."""
     from cugraph_spark.csr import pagerank_csr
-    from cugraph_spark.operators import centrality, spectral, traversal
+    from cugraph_spark.operators import (
+        centrality,
+        minimum_spanning_tree,
+        spectral,
+        strongly_connected_components,
+        traversal,
+    )
     from cugraph_spark.operators.lpa import label_propagation
     from cugraph_spark.utilities import get_traversed_cost
 
@@ -321,6 +329,13 @@ def _run_loop(karate_df, case: str) -> None:
     def weighted():
         w = karate_df.withColumn("w", (karate_df["src"] + karate_df["dst"]).cast("double"))
         return LinkGraph.from_edges(w, weight="w", directed=False, renumber=False)
+
+    def seeded_digraph():
+        # the 40-vertex digraph of test_scc_matches_networkx_on_seeded_digraph
+        rng = np.random.default_rng(11)
+        edges = {(int(a), int(b)) for a, b in rng.integers(0, 40, size=(160, 2)) if a != b}
+        df = karate_df.sparkSession.createDataFrame(sorted(edges), "src LONG, dst LONG")
+        return LinkGraph.from_edges(df, directed=True)
 
     def traversed_cost():
         g = weighted()
@@ -344,6 +359,8 @@ def _run_loop(karate_df, case: str) -> None:
         "spectral-modularity": lambda: spectral.spectral_modularity_maximization_clustering(
             graph(), 2, evs_max_iter=4
         ),
+        "scc": lambda: strongly_connected_components(seeded_digraph()).collect(),
+        "mst": lambda: minimum_spanning_tree(weighted()).collect(),
     }
     runs[case]()
 
@@ -352,20 +369,22 @@ def _run_loop(karate_df, case: str) -> None:
 def test_superstep_loop_one_job_per_superstep(spark, karate_df, monkeypatch, case):
     """Every loop on ``graph.superstep_loop`` runs each superstep as exactly
     one Spark job — the materialization, with the convergence scalars
-    folded into it — with AQE at the session default.  Counted between
-    consecutive returns of ``truncate_state`` as the loop's own module
-    calls it: the initial state, then one per superstep, and none after
-    the loop.  PageRank's loop is pinned, with its plans, by the test
-    above."""
+    folded into it — with AQE at the session default.  Counted, inside
+    each ``superstep_loop`` call the case makes, between consecutive
+    returns of ``truncate_state`` as the loop's own module calls it: the
+    initial state, then one per superstep.  A case with one loop calls
+    none after it; SCC (coloring and marking per round) and MST (one merge
+    per Borůvka round) call it between their loops.  PageRank's loop is
+    pinned, with its plans, by the test above."""
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     loop = _LOOPS[case]
-    seen = []
+    calls = []  # (first truncation, end of the call's truncations, supersteps)
     real_loop = graph_mod.superstep_loop
 
     def counting_loop(*args, **kwargs):
-        seen.append(len(rec.jobs))
+        start = len(rec.jobs)
         out = real_loop(*args, **kwargs)
-        seen.append(out[1].iterations)
+        calls.append((start, len(rec.jobs), out[1].iterations))
         return out
 
     mod = importlib.import_module(f"cugraph_spark.{loop}")
@@ -375,11 +394,15 @@ def test_superstep_loop_one_job_per_superstep(spark, karate_df, monkeypatch, cas
         _run_loop(karate_df, case)
     finally:
         rec.close()
-    before, steps = seen
-    assert steps >= 2, steps
-    supersteps = rec.jobs[before:]
-    assert len(supersteps) == steps + 1, (rec.jobs, seen)
-    assert [b - a for a, b in zip(supersteps, supersteps[1:])] == [1] * steps, supersteps
+    assert calls
+    assert sum(steps for _, _, steps in calls) >= 2, calls
+    if len(calls) == 1:
+        assert calls[0][1] == len(rec.jobs), (rec.jobs, calls)
+    for start, end, steps in calls:
+        assert steps >= 1, calls
+        supersteps = rec.jobs[start:end]
+        assert len(supersteps) == steps + 1, (rec.jobs, calls)
+        assert [b - a for a, b in zip(supersteps, supersteps[1:])] == [1] * steps, supersteps
 
 
 def test_pagerank_no_superstep_raises(spark, karate_df, tmp_path):
